@@ -237,7 +237,8 @@ def build_stdout_line(
         "sf": sf_val,
     }
     for k, v in (extra or {}).items():
-        assert k not in line_obj, f"extra field {k!r} collides with contract"
+        if k in line_obj:
+            raise ValueError(f"extra field {k!r} collides with contract")
         line_obj[k] = v
     sep = (",", ":")
     line = json.dumps(line_obj, separators=sep)

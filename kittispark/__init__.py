@@ -5,6 +5,7 @@ operator surface designed for 100 TB scale.
 
 Layout:
     session     — tuned SparkSession builder (local test / cluster-ready)
+    worker_daemon — Python-worker daemon of local sessions (see session)
     registry    — named query registry driving ``__spark_entry__``
     sources/    — table + KITTI-format readers
     operators/  — KITTI geometry, dedup, similarity, text, multimodal
@@ -13,7 +14,15 @@ Layout:
     streaming/  — Structured Streaming facade over the events table
 """
 
-from kittispark.session import get_spark
-
 __all__ = ["get_spark"]
 __version__ = "0.1.0"
+
+
+def __getattr__(name: str):
+    # Lazy, so that importing the package (as ``python -m
+    # kittispark.worker_daemon`` does first) does not import pyspark.
+    if name == "get_spark":
+        from kittispark.session import get_spark
+
+        return get_spark
+    raise AttributeError(f"module {__name__!r} has no attribute {name!r}")

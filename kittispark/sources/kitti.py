@@ -102,7 +102,8 @@ def read_labels(spark: SparkSession, label_dir: str) -> DataFrame:
     rows (reference data_utils.py:17-33). Pure text scan + positional
     split/cast — no Python in the path."""
     lines = (
-        spark.read.text(f"{label_dir}/*.txt")
+        spark.read.option("pathGlobFilter", "*.txt")
+        .text(label_dir)
         .select(
             frame_id_from_file().alias("frame_id"),
             # trim first: Python str.split() (the reference semantics)
@@ -143,7 +144,8 @@ def read_calib(spark: SparkSession, calib_dir: str) -> DataFrame:
     # subexpression and evaluates it before the contains() predicate
     # can short-circuit.
     return (
-        spark.read.text(f"{calib_dir}/*.txt")
+        spark.read.option("pathGlobFilter", "*.txt")
+        .text(calib_dir)
         .select(
             frame_id_from_file().alias("frame_id"),
             F.trim(F.get(parts, 0)).alias("key"),

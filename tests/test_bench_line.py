@@ -81,8 +81,27 @@ def test_extra_fields_ride_the_line_and_survive_capping():
 def test_extra_field_cannot_shadow_contract_key():
     import pytest
 
-    with pytest.raises(AssertionError):
+    with pytest.raises(ValueError):
         bench.build_stdout_line({"q0": 1.0}, 1.0, 0.1, extra={"value": 9.9})
+
+
+def test_extra_field_collision_raises_under_python_O():
+    # a bare assert vanishes under -O and the extra would silently
+    # overwrite the contract's "value"
+    import subprocess
+    import sys
+
+    code = (
+        "import importlib.util, sys\n"
+        f"spec = importlib.util.spec_from_file_location('bench', {_spec.origin!r})\n"
+        "bench = importlib.util.module_from_spec(spec); spec.loader.exec_module(bench)\n"
+        "try:\n"
+        "    bench.build_stdout_line({'q0': 1.0}, 1.0, 0.1, extra={'unit': 'x'})\n"
+        "except ValueError:\n"
+        "    sys.exit(0)\n"
+        "sys.exit(1)\n"
+    )
+    assert subprocess.run([sys.executable, "-O", "-c", code]).returncode == 0
 
 
 def _detail(load: float, sf: float = 0.1) -> dict:

@@ -58,6 +58,31 @@ def test_read_points_matches_binary(loaded):
     np.testing.assert_allclose(got, want, rtol=1e-7)
 
 
+def _scan_root_paths(df) -> list[str]:
+    leaf = df._jdf.queryExecution().optimizedPlan().collectLeaves().head()
+    roots = leaf.relation().location().rootPaths()
+    return [roots.apply(i).toUri().getPath().rstrip("/") for i in range(roots.size())]
+
+
+def test_text_sources_scan_the_directory_not_a_glob(spark, fixture, tmp_path):
+    # a `dir/*.txt` path made every read log a FileStreamSink WARN with
+    # a FileNotFoundException stack trace; pathGlobFilter on the
+    # directory keeps the same files and rows without it
+    root, frames = fixture
+    for sub, read in (("label_2", read_labels), ("calib", read_calib)):
+        d = f"{root}/{sub}"
+        assert _scan_root_paths(read(spark, d)) == [d]
+        ids = read(spark, d).select("frame_id").distinct().collect()
+        assert {r["frame_id"] for r in ids} == set(frames)
+    # files other than *.txt stay out, as with the glob
+    d = tmp_path / "label_2"
+    d.mkdir()
+    src = f"{root}/label_2/{min(frames)}.txt"
+    (d / f"{min(frames)}.txt").write_text(open(src).read())
+    (d / "notes.md").write_text("Car 0 0 0 1 2 3 4 5 6 7 8 9 10 11\n")
+    assert {r["frame_id"] for r in read_labels(spark, str(d)).collect()} == {min(frames)}
+
+
 def test_read_labels_fields(loaded):
     frames, _, labels, _ = loaded
     expected = sum(len(fr["labels"]) for fr in frames.values())
