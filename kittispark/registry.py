@@ -108,18 +108,15 @@ def _load_all() -> None:
 # but every NEVER-adjudicated query outranks them for window slots:
 # these already carry exhaustive local multi-SF verification of the
 # new form, the truly-fresh ones have no driver signal at all.
-_REVERIFY: frozenset[str] = frozenset({
-    # r12 optimization round: the ExactSubstr span pipeline's
-    # shingling moved from the posexplode + 7-lead-window form (an
-    # Exchange+Sort of EVERY TOKEN ROW) onto the zero-shuffle
-    # shingle_pos_rows atom; the interval-union windows now shuffle
-    # only MARKED positions. Output provably identical (same
-    # (doc_id, pos, md5(8-gram)) triples): strict 3-SF MATCH + both
-    # banked 50x agghashes reproduced bit-identically
-    # (OPTIMIZATION_r12.md). 375.6 -> 86.2 s at the 250x tier.
-    "exact_substring_spans",
-    "exact_substring_removal",
-})
+_REVERIFY: frozenset[str] = frozenset()
+# r13 start: emptied — both r12 waiters (exact_substring_spans and
+# exact_substring_removal, whose shingling moved onto the zero-shuffle
+# shingle_pos_rows atom; OPTIMIZATION_r12.md) were re-adjudicated
+# GREEN in CORRECTNESS_r12.json (50/50 hash_match, both names
+# included). The one later engine change, read_labels/read_calib
+# scanning the directory with pathGlobFilter="*.txt" instead of a
+# "*.txt" path glob, reads the same files and rows, so it queues
+# nothing. Repopulate per rule 3 when a post-verdict rewrite lands.
 # r12 start: emptied — all 10 r11 waiters (semantic_dedup_clustered's
 # k-scaling, the 5 packed-ADC PQ/IVFADC names, contrastive_margin_
 # mining's single-agg, dim_truncation_recall's one-pass,
