@@ -102,6 +102,31 @@ def axis_align(df: DataFrame, x: str = "x", y: str = "y", z: str = "z") -> DataF
     ).select(*df.columns)
 
 
+def sorted_percentile(zs: Column, percentage: float) -> Column:
+    """Exact percentile read off an ascending array of doubles, with
+    Spark's own `percentile` formula: position (n-1)*p between the
+    floor and ceil order statistics v_lo and v_hi, v_lo when the two
+    compare equal (always the case when floor == ceil; SQL equality
+    also holds for NaN = NaN and -0.0 = 0.0, as in Spark's boxed key
+    compare), else (hi - pos)*v_lo + (pos - lo)*v_hi in that order.
+    An empty array gives null (`get` is null out of range), like
+    `percentile` over a group of nulls. Feed it
+    sort_array(collect_list(double)) — see frame_z_scale. A percentage
+    outside [0, 1] raises, as `percentile` rejects it."""
+    if not 0.0 <= percentage <= 1.0:
+        raise ValueError(f"percentage must be in [0, 1], got {percentage!r}")
+    pos = (F.size(zs) - 1).cast("double") * F.lit(percentage)
+    lo, hi = F.floor(pos), F.ceil(pos)
+    v_lo, v_hi = F.get(zs, lo.cast("int")), F.get(zs, hi.cast("int"))
+    return F.when(v_lo == v_hi, v_lo).otherwise((hi - pos) * v_lo + (pos - lo) * v_hi)
+
+
+def _sorted_values(z: str) -> Column:
+    """The group's non-null values as an ascending double array: the
+    one per-group state the exact percentile needs."""
+    return F.sort_array(F.collect_list(F.col(z).cast("double")))
+
+
 def frame_z_scale(
     points: DataFrame,
     percentage: float = 0.05,
@@ -110,17 +135,29 @@ def frame_z_scale(
     z: str = "z",
 ) -> DataFrame:
     """Per-frame percentile of z (reference np.percentile(z, 5),
-    data_pipeline.py:29). Exact `percentile` (default) for golden
-    parity; `approx=True` IS the documented 100 TB switch — the
-    single-pass mergeable percentile_approx sketch at the same call
-    site (SURVEY §7.4). The switch itself is driver-verified by the
-    rescale_by_percentile_approx query's error-bounded oracle."""
-    agg = (
-        F.percentile_approx(z, percentage, accuracy)
-        if approx
-        else F.percentile(z, percentage)
+    data_pipeline.py:29). Exact by default, for golden parity;
+    `approx=True` IS the documented 100 TB switch — the single-pass
+    mergeable percentile_approx sketch at the same call site (SURVEY
+    §7.4). The switch itself is driver-verified by the
+    rescale_by_percentile_approx query's error-bounded oracle.
+
+    The exact branch is sorted_percentile over the frame's sorted
+    collect_list, bit-identical to Spark's `percentile` aggregate
+    (property-tested in tests/test_sorted_percentile_property.py).
+    It avoids `percentile`, which boxes every value into an
+    OpenHashMap of counts and ships the boxed maps through the
+    shuffle; a flat double array is cheaper to build, ship and sort,
+    and it is the state analyze() folds in the same aggregate as the
+    frame's extrema."""
+    if approx:
+        return points.groupBy("frame_id").agg(
+            F.percentile_approx(z, percentage, accuracy).alias("z_scale")
+        )
+    return (
+        points.groupBy("frame_id")
+        .agg(_sorted_values(z).alias("zs"))
+        .select("frame_id", sorted_percentile(F.col("zs"), percentage).alias("z_scale"))
     )
-    return points.groupBy("frame_id").agg(agg.alias("z_scale"))
 
 
 def rescale_z(
@@ -230,52 +267,95 @@ def _minmax(cols: list[str]) -> list[Column]:
     return out
 
 
+def _envelope(
+    points: DataFrame, labels: DataFrame, calib_wide: DataFrame
+) -> DataFrame:
+    """analyze()'s 1-row envelope of extrema, unexecuted."""
+    pts = axis_align(apply_calibration(points, calib_wide))
+    frame_pts = (
+        pts.groupBy("frame_id")
+        .agg(_sorted_values("z").alias("zs"), *_minmax(["x", "y", "z", "intensity"]))
+        .withColumn("z_scale", sorted_percentile(F.col("zs"), 0.05))
+    )
+
+    real = labels.filter(F.col("label") != "DontCare")
+    frame_lbl = (
+        real.select(
+            "frame_id",
+            "dim_h",
+            "dim_w",
+            "dim_l",
+            F.col("loc_x").alias("lx"),
+            F.col("loc_y").alias("ly"),
+            F.col("loc_z").alias("lz"),
+            F.explode(F.array(*corner_structs())).alias("c"),
+        )
+        .select("*", "c.cx", "c.cy", "c.cz")
+        .groupBy("frame_id")
+        .agg(*_minmax(["dim_h", "dim_w", "dim_l", "lx", "ly", "lz", "cx", "cy", "cz"]))
+    )
+
+    def fold(c: str, shifted: bool = False) -> list[Column]:
+        lo, hi = F.col(f"min_{c}"), F.col(f"max_{c}")
+        if shifted:  # z rescale on index 2 only (data_pipeline.py:29-41)
+            lo, hi = lo - F.col("z_scale"), hi - F.col("z_scale")
+        return [F.min(lo).alias(f"min_{c}"), F.max(hi).alias(f"max_{c}")]
+
+    return frame_pts.join(frame_lbl, "frame_id", "left").agg(
+        *fold("x"), *fold("y"), *fold("z", True), *fold("intensity"),
+        *fold("dim_h"), *fold("dim_w"), *fold("dim_l"),
+        *fold("lx"), *fold("ly"), *fold("lz", True),
+        *fold("cx"), *fold("cy"), *fold("cz", True),
+    )
+
+
 def analyze(
     points: DataFrame, labels: DataFrame, calib_wide: DataFrame
 ) -> AnalysisResult:
     """Full E1 analysis (reference get_analysis, data_pipeline.py:8-64)
-    as one lazy DAG with three aggregate branches sharing the same
-    per-frame z-scale:
+    as per-frame folds and one action:
 
-      points -> calibrate -> axis-align -> rescale -> global min/max      (A1)
-      labels (non-DontCare) -> dims/locations extrema (z rescaled)       (A2,A3)
-      labels -> corner explode -> rescale -> global min/max              (A4)
+      points -> calibrate -> axis-align -> per-frame fold: sorted z,
+                x/y/z/intensity extrema, z_scale                 (A1)
+      labels (non-DontCare) -> corner explode -> per-frame fold:
+                dims, locations, corner extrema                  (A2-A4)
+      point folds LEFT JOIN label folds -> global fold -> collect
 
-    then the P13/P14 driver-side postprocess on the 1-row envelopes.
+    then the P13/P14 driver-side postprocess on the 1-row envelope.
     Reference prints round-2 values; rounding applied here identically
-    (data_pipeline.py:50-63)."""
-    pts = axis_align(apply_calibration(points, calib_wide))
-    scales = frame_z_scale(pts)
-    pts_rescaled = rescale_z(pts, scales)
+    (data_pipeline.py:50-63).
 
-    p_agg = pts_rescaled.agg(*_minmax(["x", "y", "z", "intensity"]))
+    No point is rescaled. The reference shifts every z (and each
+    label's loc_z and corner z) by its frame's z_scale before taking
+    extrema; here a frame's rescaled extrema are min - z_scale and
+    max - z_scale. That is exact: for a fixed s, fl(z - s) is monotone
+    non-decreasing in z (rounding is monotone), so min and max commute
+    with the per-frame shift. The one exception needs z_scale = -inf,
+    i.e. a -inf height among the frame's points: then fl(-inf - s) is
+    NaN while every larger z gives +inf. Labels of frames without
+    calibrated points drop out, as in the reference's rejoin with the
+    per-frame scales. min and max are idempotent, so carrying a
+    label's dims and location on its 8 corner rows changes nothing.
 
-    real = labels.filter(F.col("label") != "DontCare")
-    # Locations with z rescale on index 2 only (data_pipeline.py:40-41)
-    loc = (
-        real.join(F.broadcast(scales), "frame_id")
-        .select(
-            F.col("loc_x").alias("lx"),
-            F.col("loc_y").alias("ly"),
-            (F.col("loc_z") - F.col("z_scale")).alias("lz"),
-            "dim_h",
-            "dim_w",
-            "dim_l",
-        )
-    )
-    d_agg = loc.agg(*_minmax(["dim_h", "dim_w", "dim_l", "lx", "ly", "lz"]))
+    The point fold must feed the plan exactly once. Handing a `scales`
+    projection of it to a label branch as well lets column pruning
+    split it into a (frame_id, z) copy and a full-width copy, which
+    share neither the .bin decode nor the calibration broadcasts, so
+    the cloud is decoded twice. That shape runs 12 jobs per call; this
+    one runs 7.
 
-    corners = bbox_corners(real).join(F.broadcast(scales), "frame_id").select(
-        "cx", "cy", (F.col("cz") - F.col("z_scale")).alias("cz")
-    )
-    oc_agg = corners.agg(*_minmax(["cx", "cy", "cz"]))
-
-    # ONE action for the whole envelope: the three 1-row aggregates
-    # are cross-joined (1x1x1 — broadcast nested loop over single
-    # rows, no data movement) and collected together, so the driver
-    # launches one job instead of three. Column names are disjoint
-    # across the branches, so the row exposes all ~40 scalars at once.
-    p = d = oc = p_agg.crossJoin(d_agg).crossJoin(oc_agg).collect()[0]
+    The action's jobs carry the description
+    `kittispark.operators.kitti.analyze`, so an event log attributes
+    them without a caller's wrapping; the caller's description is
+    restored afterwards and its job group is left alone."""
+    env = _envelope(points, labels, calib_wide)
+    sc = points.sparkSession.sparkContext
+    caller_desc = sc.getLocalProperty("spark.job.description")
+    sc.setJobDescription("kittispark.operators.kitti.analyze")
+    try:
+        p = d = oc = env.collect()[0]
+    finally:
+        sc.setLocalProperty("spark.job.description", caller_desc)
 
     # --- driver-side postprocess on ~40 scalars (P13/P14) ---
     min_point = (p["min_x"], p["min_y"], p["min_z"], p["min_intensity"])

@@ -108,7 +108,14 @@ def _load_all() -> None:
 # but every NEVER-adjudicated query outranks them for window slots:
 # these already carry exhaustive local multi-SF verification of the
 # new form, the truly-fresh ones have no driver signal at all.
-_REVERIFY: frozenset[str] = frozenset()
+_REVERIFY: frozenset[str] = frozenset({"kitti_analysis_envelope"})
+# r13: kitti_analysis_envelope queued — frame_z_scale's exact branch
+# (which it runs, with rescale_z on its output) now reads Spark's
+# percentile formula off a sorted collect_list instead of the
+# `percentile` aggregate. Bit-identical by the property test in
+# tests/test_sorted_percentile_property.py and local oracle parity,
+# but the banked r12 green predates the rewrite. It is the only
+# registered query that reaches frame_z_scale, rescale_z or analyze.
 # r13 start: emptied — both r12 waiters (exact_substring_spans and
 # exact_substring_removal, whose shingling moved onto the zero-shuffle
 # shingle_pos_rows atom; OPTIMIZATION_r12.md) were re-adjudicated

@@ -20,6 +20,7 @@ bank).
 
 from __future__ import annotations
 
+import ast
 import glob
 import json
 import os
@@ -86,18 +87,80 @@ def _git_epoch(args: list[str]) -> int:
         return 0
 
 
+def _module_file(module: str, root: str) -> str | None:
+    """Repo-relative file of a dotted kittispark module, or None when
+    the name is not a module in the tree (e.g. an imported function)."""
+    base = os.path.join(*module.split("."))
+    for rel in (base + ".py", os.path.join(base, "__init__.py")):
+        if os.path.isfile(os.path.join(root, rel)):
+            return rel
+    return None
+
+
+def _direct_imports(rel: str, root: str) -> set[str]:
+    """Repo-relative files of the kittispark modules that the file
+    `rel` imports anywhere in its body, function-level imports
+    included (queries often import their operators inside the query
+    function)."""
+    with open(os.path.join(root, rel)) as f:
+        tree = ast.parse(f.read(), rel)
+    # the package a relative import starts from (an __init__.py
+    # belongs to its own directory's package, like any module there)
+    package_parts = os.path.dirname(rel).split(os.sep)
+    names: list[str] = []
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Import):
+            names += [a.name for a in node.names]
+        elif isinstance(node, ast.ImportFrom):
+            if node.level:
+                parts = package_parts[: len(package_parts) - node.level + 1]
+                base = ".".join(parts + ([node.module] if node.module else []))
+            else:
+                base = node.module or ""
+            names.append(base)
+            # `from pkg import mod` imports a submodule when one exists
+            names += [f"{base}.{a.name}" for a in node.names]
+    out = set()
+    for name in names:
+        if name == "kittispark" or name.startswith("kittispark."):
+            f = _module_file(name, root)
+            if f is not None:
+                out.add(f)
+    return out
+
+
+# Imported by every query module for @register, but edits to them
+# change no query's plan or output: not followed.
+_BOOKKEEPING = frozenset({"kittispark/registry.py", "kittispark/_green_bank.py"})
+
+
+def module_deps(rel: str, root: str = REPO) -> set[str]:
+    """`rel` plus every kittispark module file it reaches through
+    imports, at any depth: the files whose edit can change what a
+    query defined in `rel` computes (the registry bookkeeping aside)."""
+    seen = {rel}
+    todo = [rel]
+    while todo:
+        for dep in _direct_imports(todo.pop(), root) - seen - _BOOKKEEPING:
+            seen.add(dep)
+            todo.append(dep)
+    return seen
+
+
 def staleness_report(bank: dict[str, int]) -> list[str]:
     """The re-verification cadence tripwire (VERDICT r8 #6): with a
     50-slot window over 266 greens a banked verdict refreshes every
     ~5 rounds by rotation alone. Flag any query whose green verdict
-    is MORE than 6 rounds old AND whose defining module changed
+    is MORE than 6 rounds old AND whose defining module, or a
+    kittispark module it imports at any depth (module_deps), changed
     since that verdict landed (a forgotten _REVERIFY entry — the
     registry discipline says a compute-path change voids the banked
     green). Also list the stalest decile with (query, green round,
-    defining file, changed-since flag) so drift is visible before it
-    becomes a flag. File granularity is the tripwire's resolution: a
-    module edit flags every stale query it defines — cheap, and a
-    false positive just means one extra re-adjudication."""
+    defining file, newest changed dependency) so drift is visible
+    before it becomes a flag. File granularity is the tripwire's
+    resolution: a module edit flags every stale query that reaches
+    it — cheap, and a false positive just means one extra
+    re-adjudication."""
     import inspect
 
     from kittispark import registry
@@ -105,7 +168,6 @@ def staleness_report(bank: dict[str, int]) -> list[str]:
     specs = registry.all_specs()
     current = max(bank.values(), default=0)
     lines: list[str] = []
-    # one git call per distinct module file, not per query
     file_of = {}
     for name in bank:
         spec = specs.get(name)
@@ -113,8 +175,13 @@ def staleness_report(bank: dict[str, int]) -> list[str]:
             continue
         f = inspect.getsourcefile(spec.fn) or "?"
         file_of[name] = os.path.relpath(f, REPO)
+    deps_of = {
+        f: module_deps(f) if os.path.isfile(os.path.join(REPO, f)) else {f}
+        for f in set(file_of.values())
+    }
+    # one git call per distinct module file, not per query
     changed_at = {
-        f: _git_epoch(["--", f]) for f in sorted(set(file_of.values()))
+        f: _git_epoch(["--", f]) for f in sorted(set().union(*deps_of.values()))
     }
     verdict_at = {
         rnd: _git_epoch(["--diff-filter=A", "--", f"CORRECTNESS_r{rnd:02d}.json"])
@@ -126,23 +193,24 @@ def staleness_report(bank: dict[str, int]) -> list[str]:
         f = file_of.get(name)
         if f is None:
             continue
-        changed = changed_at.get(f, 0) > verdict_at.get(rnd, 0) > 0
-        rows.append((rnd, name, f, changed))
-    rows.sort()
+        newest = max(sorted(deps_of[f]), key=lambda d: changed_at.get(d, 0))
+        changed = changed_at.get(newest, 0) > verdict_at.get(rnd, 0) > 0
+        rows.append((rnd, name, f, newest if changed else None))
+    rows.sort(key=lambda r: r[:3])
     flagged = [
-        (rnd, name, f)
-        for rnd, name, f, changed in rows
-        if changed and current - rnd > 6 and name not in registry._REVERIFY
+        (rnd, name, dep)
+        for rnd, name, _, dep in rows
+        if dep and current - rnd > 6 and name not in registry._REVERIFY
     ]
-    for rnd, name, f in flagged:
+    for rnd, name, dep in flagged:
         lines.append(
             f"STALE: {name} green r{rnd} ({current - rnd} rounds old) but "
-            f"{f} changed since — queue in _REVERIFY or re-sweep"
+            f"{dep} changed since — queue in _REVERIFY or re-sweep"
         )
     decile = rows[: max(1, len(rows) // 10)]
     lines.append(f"stalest decile of {len(rows)} banked greens (current r{current}):")
-    for rnd, name, f, changed in decile:
-        mark = " [file changed since]" if changed else ""
+    for rnd, name, f, dep in decile:
+        mark = f" [{dep} changed since]" if dep else ""
         lines.append(f"  {name}: green r{rnd}, {f}{mark}")
     return lines
 

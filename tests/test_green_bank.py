@@ -78,3 +78,43 @@ def test_reverify_names_are_registered():
 
     missing = _REVERIFY - set(registry.all_specs())
     assert not missing, f"_REVERIFY names not in registry: {missing}"
+
+
+def test_module_deps_follows_kittispark_imports_at_any_depth(tmp_path):
+    """The staleness tripwire judges a query by every kittispark module
+    its defining file reaches: top-level and function-level imports,
+    `import a.b`, `from pkg import mod`, relative imports, at any
+    depth; the registry bookkeeping and non-kittispark imports are
+    not followed."""
+    mod = _load_script()
+    files = {
+        "kittispark/__init__.py": "",
+        "kittispark/q.py": (
+            "import os\n"
+            "from kittispark import b\n"
+            "from kittispark.registry import register\n"
+            "def query():\n"
+            "    from kittispark.sub.e import f\n"
+            "    return f\n"
+        ),
+        "kittispark/b.py": "import kittispark.c\n",
+        "kittispark/c.py": "from . import d\n",
+        "kittispark/d.py": "import numpy\n",
+        "kittispark/sub/__init__.py": "",
+        "kittispark/sub/e.py": "from ..c import g\ndef f():\n    pass\n",
+        "kittispark/registry.py": "from kittispark import unrelated\n",
+        "kittispark/unrelated.py": "",
+    }
+    for rel, text in files.items():
+        path = tmp_path / rel
+        path.parent.mkdir(parents=True, exist_ok=True)
+        path.write_text(text)
+    assert mod.module_deps("kittispark/q.py", str(tmp_path)) == {
+        "kittispark/q.py",
+        "kittispark/__init__.py",
+        "kittispark/b.py",
+        "kittispark/c.py",
+        "kittispark/d.py",
+        "kittispark/sub/e.py",
+    }
+    assert mod.module_deps("kittispark/d.py", str(tmp_path)) == {"kittispark/d.py"}

@@ -4,6 +4,8 @@ implementation of the reference semantics (SURVEY §5.2-5.4).
 
 from __future__ import annotations
 
+import os
+
 import numpy as np
 import pytest
 
@@ -414,3 +416,111 @@ def test_center_area_cutout_golden(loaded, tmp_path):
     if want:
         assert stats[0]["min_points"] == min(want.values())
         assert stats[0]["max_points"] == max(want.values())
+
+
+def _group_jobs(spark, group: str) -> list[int]:
+    sc = spark.sparkContext
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return list(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_analyze_decodes_once_in_at_most_seven_jobs(spark, loaded):
+    """analyze is one action over per-frame folds: the point fold feeds
+    the plan once, so the .bin decode (the one MapInPandas) and the
+    calibration broadcasts run once, and the whole call takes <= 7
+    jobs (a rescale join back onto the cloud splits the plan into
+    two decodes and 12 jobs)."""
+    import contextlib
+    import io
+    import re
+
+    from kittispark.operators.kitti import _envelope
+
+    _, points, labels, calib = loaded
+    env = _envelope(points, labels, calib)
+    env.collect()
+    buf = io.StringIO()
+    with contextlib.redirect_stdout(buf):
+        env.explain("formatted")
+    # the tree of the executed (final AQE) plan, before the initial one
+    final = buf.getvalue().split("== Initial Plan ==")[0]
+    assert "== Final Plan ==" in final
+    assert len(re.findall(r"MapInPandas \(\d+\)", final)) == 1
+
+    sc = spark.sparkContext
+    sc.setJobGroup("analyze-jobs", "analyze-jobs")
+    try:
+        analyze(points, labels, calib)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert 0 < len(_group_jobs(spark, "analyze-jobs")) <= 7
+
+
+@pytest.mark.parametrize("caller_desc", ["caller-span", None])
+def test_analyze_labels_its_jobs_and_restores_description(spark, loaded, caller_desc):
+    _, points, labels, calib = loaded
+    sc = spark.sparkContext
+    group = f"analyze-label-{caller_desc}"
+    sc.setLocalProperty("spark.jobGroup.id", group)
+    sc.setLocalProperty("spark.job.description", caller_desc)
+    try:
+        analyze(points, labels, calib)
+        assert sc.getLocalProperty("spark.job.description") == caller_desc
+        assert sc.getLocalProperty("spark.jobGroup.id") == group
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    jobs = _group_jobs(spark, group)
+    assert jobs
+    store = sc._jsc.sc().statusStore()
+    for j in jobs:
+        desc = store.job(j).description()
+        assert desc.isDefined() and desc.get() == "kittispark.operators.kitti.analyze"
+
+
+def _label_line(cls: str, dims, loc, ry: float) -> str:
+    # KITTI label_2 layout: class truncated occluded alpha bbox(4)
+    # dims(h, w, l) location(x, y, z) rotation_y
+    return " ".join(
+        [cls, "0.0", "0", "0.0", "0.0", "0.0", "50.0", "50.0"]
+        + [repr(float(v)) for v in (*dims, *loc, ry)]
+    )
+
+
+def test_analyze_edge_frames_golden(spark, tmp_path):
+    """Frames that miss a part: one with points and only a DontCare
+    label, a label file with neither points nor calibration, and a
+    .bin with calibration but no label file. Only frames with
+    calibrated points count, and of their labels only the real ones —
+    the NumPy golden sees exactly those frames."""
+    root = str(tmp_path / "kitti")
+    frames = make_fixture(root, n_frames=4, seed=77)
+    ids = sorted(frames)
+    # points + calibration, label file holds only a DontCare box
+    dontcare = ids[1]
+    with open(f"{root}/label_2/{dontcare}.txt", "w") as f:
+        f.write(_label_line("DontCare", (90.0, 90.0, 90.0), (500.0, 500.0, 500.0), 0.3) + "\n")
+    frames[dontcare]["labels"] = []
+    # .bin + calibration, no label file
+    os.remove(f"{root}/label_2/{ids[2]}.txt")
+    frames[ids[2]]["labels"] = []
+    # a label file with no points and no calibration: its (huge) box
+    # must not reach the envelope
+    with open(f"{root}/label_2/009999.txt", "w") as f:
+        f.write(_label_line("Car", (80.0, 80.0, 80.0), (-900.0, 900.0, -900.0), 1.0) + "\n")
+    assert not os.path.exists(f"{root}/velodyne/009999.bin")
+    assert not os.path.exists(f"{root}/calib/009999.txt")
+
+    points = read_points(spark, f"{root}/velodyne")
+    labels = read_labels(spark, f"{root}/label_2")
+    calib = calib_matrices(read_calib(spark, f"{root}/calib"))
+    got = analyze(points, labels, calib)
+    want = golden_analysis(frames)
+    for field in (
+        "min_point", "max_point", "min_dim", "max_dim",
+        "min_loc", "max_loc", "min_obj_corner", "max_obj_corner",
+    ):
+        np.testing.assert_allclose(getattr(got, field), want[field], rtol=1e-9, err_msg=field)
+    assert got.minimal_area == tuple(map(tuple, want["minimal_area"]))
+    assert got.maximal_area == tuple(map(tuple, want["maximal_area"]))
