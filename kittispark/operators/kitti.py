@@ -6,6 +6,13 @@ calibration row — whole-stage-codegen'd JVM arithmetic, no Python on
 the hot path. Parity is golden-tested against NumPy reference
 semantics in tests/test_kitti_golden.py.
 
+The expressions are written as SQL text, generated once at import
+(module constants of type str), and parsed by F.expr / selectExpr /
+filter on each call: one JVM parse per expression instead of a py4j
+round-trip per Column node. Each parsed tree analyzes to the same
+plan as the Column-built form it replaced (tests/test_kitti_golden.py
+keeps those forms), so plans, jobs and results are unchanged.
+
 Reference call sites (for parity audit):
 - apply_calibration: data_utils.py:59-92 (velo->cam 3x4 then
   rectification 3x3, intensity pass-through)
@@ -29,10 +36,20 @@ from dataclasses import dataclass
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from kittispark.operators.util import column_ref_sql, qident, sql_number
+
 
 # --------------------------------------------------------------------------
 # Calibration: tall (frame_id, key, values) -> wide broadcastable row
 # --------------------------------------------------------------------------
+
+
+_TR_CELLS_SQL = ("frame_id",) + tuple(
+    f"element_at(values, {i + 1}) AS t{i // 4}{i % 4}" for i in range(12)
+)
+_R0_CELLS_SQL = ("frame_id",) + tuple(
+    f"element_at(values, {i + 1}) AS r{i // 3}{i % 3}" for i in range(9)
+)
 
 
 def calib_matrices(calib_tall: DataFrame) -> DataFrame:
@@ -42,21 +59,22 @@ def calib_matrices(calib_tall: DataFrame) -> DataFrame:
     One row per frame, a dozen doubles — the canonical broadcast side
     of every geometry join (reference keeps these as an in-process
     dict, SURVEY §4 'manual broadcast')."""
-    tr = calib_tall.filter(F.col("key") == "Tr_velo_to_cam").select(
-        "frame_id",
-        *[
-            F.element_at("values", i + 1).alias(f"t{i // 4}{i % 4}")
-            for i in range(12)
-        ],
-    )
-    r0 = calib_tall.filter(F.col("key") == "R0_rect").select(
-        "frame_id",
-        *[
-            F.element_at("values", i + 1).alias(f"r{i // 3}{i % 3}")
-            for i in range(9)
-        ],
-    )
+    tr = calib_tall.filter("key = 'Tr_velo_to_cam'").selectExpr(*_TR_CELLS_SQL)
+    r0 = calib_tall.filter("key = 'R0_rect'").selectExpr(*_R0_CELLS_SQL)
     return tr.join(r0, "frame_id")
+
+
+# cam_k = Tr[k,:] . (x, y, z, 1);  rect_i = R0[i,:] . cam, summed left
+# to right in that order
+_CAM_SQL = tuple(f"(t{k}0 * x + t{k}1 * y + t{k}2 * z + t{k}3)" for k in range(3))
+_RECTIFY_SQL = (
+    "frame_id",
+    *(
+        f"r{i}0 * {_CAM_SQL[0]} + r{i}1 * {_CAM_SQL[1]} + r{i}2 * {_CAM_SQL[2]} AS {axis}"
+        for i, axis in enumerate("xyz")
+    ),
+    "intensity",
+)
 
 
 def apply_calibration(points: DataFrame, calib_wide: DataFrame) -> DataFrame:
@@ -68,24 +86,7 @@ def apply_calibration(points: DataFrame, calib_wide: DataFrame) -> DataFrame:
     calib side is broadcast — the only wide data movement is the
     points scan itself."""
     j = points.join(F.broadcast(calib_wide), "frame_id")
-    cam = [
-        F.col(f"t{k}0") * F.col("x")
-        + F.col(f"t{k}1") * F.col("y")
-        + F.col(f"t{k}2") * F.col("z")
-        + F.col(f"t{k}3")
-        for k in range(3)
-    ]
-    rect = [
-        F.col(f"r{i}0") * cam[0] + F.col(f"r{i}1") * cam[1] + F.col(f"r{i}2") * cam[2]
-        for i in range(3)
-    ]
-    return j.select(
-        "frame_id",
-        rect[0].alias("x"),
-        rect[1].alias("y"),
-        rect[2].alias("z"),
-        "intensity",
-    )
+    return j.selectExpr(*_RECTIFY_SQL)
 
 
 def axis_align(df: DataFrame, x: str = "x", y: str = "y", z: str = "z") -> DataFrame:
@@ -93,16 +94,17 @@ def axis_align(df: DataFrame, x: str = "x", y: str = "y", z: str = "z") -> DataF
     column remap — the rotation matrix of data_utils.py:95-108
     constant-folds to select(x, z, -y); no matmul at runtime
     (SURVEY §4)."""
-    others = [c for c in df.columns if c not in (x, y, z)]
-    return df.select(
-        *others,
-        F.col(x).alias(x),
-        F.col(z).alias(y),
-        (-F.col(y)).alias(z),
-    ).select(*df.columns)
+    columns = df.columns
+    qx, qy, qz = qident(x), qident(y), qident(z)
+    return df.selectExpr(
+        *[qident(c) for c in columns if c not in (x, y, z)],
+        f"{qx} AS {qx}",
+        f"{qz} AS {qy}",
+        f"-{qy} AS {qz}",
+    ).selectExpr(*map(qident, columns))
 
 
-def sorted_percentile(zs: Column, percentage: float) -> Column:
+def sorted_percentile(zs: str | Column, percentage: float) -> Column:
     """Exact percentile read off an ascending array of doubles, with
     Spark's own `percentile` formula: position (n-1)*p between the
     floor and ceil order statistics v_lo and v_hi, v_lo when the two
@@ -112,19 +114,28 @@ def sorted_percentile(zs: Column, percentage: float) -> Column:
     An empty array gives null (`get` is null out of range), like
     `percentile` over a group of nulls. Feed it
     sort_array(collect_list(double)) — see frame_z_scale. A percentage
-    outside [0, 1] raises, as `percentile` rejects it."""
+    outside [0, 1] raises, as `percentile` rejects it.
+
+    `zs` names the array column (a name or F.col(name)); the formula
+    is SQL text, one parse per call."""
     if not 0.0 <= percentage <= 1.0:
         raise ValueError(f"percentage must be in [0, 1], got {percentage!r}")
-    pos = (F.size(zs) - 1).cast("double") * F.lit(percentage)
-    lo, hi = F.floor(pos), F.ceil(pos)
-    v_lo, v_hi = F.get(zs, lo.cast("int")), F.get(zs, hi.cast("int"))
-    return F.when(v_lo == v_hi, v_lo).otherwise((hi - pos) * v_lo + (pos - lo) * v_hi)
+    ref = column_ref_sql(zs)
+    if ref is None:
+        raise TypeError(f"sorted_percentile reads a column by name, got {zs!r}")
+    pos = f"(CAST(size({ref}) - 1 AS DOUBLE) * {sql_number(percentage)})"
+    lo, hi = f"floor({pos})", f"ceil({pos})"
+    v_lo, v_hi = f"get({ref}, CAST({lo} AS INT))", f"get({ref}, CAST({hi} AS INT))"
+    return F.expr(
+        f"CASE WHEN {v_lo} = {v_hi} THEN {v_lo}"
+        f" ELSE ({hi} - {pos}) * {v_lo} + ({pos} - {lo}) * {v_hi} END"
+    )
 
 
-def _sorted_values(z: str) -> Column:
-    """The group's non-null values as an ascending double array: the
-    one per-group state the exact percentile needs."""
-    return F.sort_array(F.collect_list(F.col(z).cast("double")))
+def _sorted_values(z: str) -> str:
+    """The group's non-null values as an ascending double array (SQL
+    text): the one per-group state the exact percentile needs."""
+    return f"sort_array(collect_list(CAST({qident(z)} AS DOUBLE)))"
 
 
 def frame_z_scale(
@@ -155,8 +166,8 @@ def frame_z_scale(
         )
     return (
         points.groupBy("frame_id")
-        .agg(_sorted_values(z).alias("zs"))
-        .select("frame_id", sorted_percentile(F.col("zs"), percentage).alias("z_scale"))
+        .agg(F.expr(f"{_sorted_values(z)} AS zs"))
+        .select("frame_id", sorted_percentile("zs", percentage).alias("z_scale"))
     )
 
 
@@ -190,38 +201,42 @@ _Y_TOP = (0, 0, 0, 0, 1, 1, 1, 1)  # 1 -> -h
 _Z_SIGNS = (-1, -1, 1, 1, -1, -1, 1, 1)
 
 
-def corner_structs() -> list:
-    """The 8 rotated+translated+axis-remapped corner expressions of a
-    3-D label box as struct columns (corner_idx, cx, cy, cz) — the
-    ONE definition of the box geometry, shared by bbox_corners (the
-    P11 explode) and viz.bbox_wireframe (the 12-edge expansion), so
-    the corner layout can never drift between analysis and rendering.
-
-    Closed form per corner (cos/sin of rotation_y once per row;
-    reference get_3d_bbox, data_utils.py:111-137: Y-rotation
-    :124-131, translation :132-134, X-remap :135-136):
-        bx = cos*sx*l/2 + sin*sz*w/2 + loc_x
-        by = {0|-h} + loc_y
-        bz = -sin*sx*l/2 + cos*sz*w/2 + loc_z
-    then the X-axis remap (bx, bz, -by)."""
-    c, s = F.cos("rotation_y"), F.sin("rotation_y")
-    corners = []
+def _corner_array_sql(named: bool) -> str:
+    structs = []
     for i in range(8):
-        xo = F.lit(_X_SIGNS[i]) * F.col("dim_l") / 2
-        yo = F.lit(-_Y_TOP[i]) * F.col("dim_h")
-        zo = F.lit(_Z_SIGNS[i]) * F.col("dim_w") / 2
-        bx = c * xo + s * zo + F.col("loc_x")
-        by = yo + F.col("loc_y")
-        bz = -s * xo + c * zo + F.col("loc_z")
-        corners.append(
-            F.struct(
-                F.lit(i).alias("corner_idx"),
-                bx.alias("cx"),
-                bz.alias("cy"),  # X-axis remap: (x, z, -y)
-                (-by).alias("cz"),
-            )
-        )
-    return corners
+        xo = f"({_X_SIGNS[i]} * dim_l / 2)"
+        yo = f"({-_Y_TOP[i]} * dim_h)"
+        zo = f"({_Z_SIGNS[i]} * dim_w / 2)"
+        bx = f"cos(rotation_y) * {xo} + sin(rotation_y) * {zo} + loc_x"
+        by = f"{yo} + loc_y"
+        bz = f"(-sin(rotation_y)) * {xo} + cos(rotation_y) * {zo} + loc_z"
+        # X-axis remap: (x, z, -y)
+        fields = (str(i), bx, bz, f"-({by})")
+        if named:
+            fields = [f"{e} AS {n}" for e, n in zip(fields, ("corner_idx", "cx", "cy", "cz"))]
+        structs.append(f"struct({', '.join(fields)})")
+    return f"array({', '.join(structs)})"
+
+
+# The 8 rotated+translated+axis-remapped corners of a 3-D label box as
+# an array of structs (corner_idx, cx, cy, cz) over the label columns
+# dim_h, dim_w, dim_l, loc_x, loc_y, loc_z and rotation_y — the ONE
+# definition of the box geometry, shared by bbox_corners (the P11
+# explode), analyze's label fold and viz.bbox_wireframe (the 12-edge
+# expansion), so the corner layout can never drift between analysis
+# and rendering.
+#
+# Closed form per corner (reference get_3d_bbox, data_utils.py:111-137:
+# Y-rotation :124-131, translation :132-134, X-remap :135-136):
+#     bx = cos*sx*l/2 + sin*sz*w/2 + loc_x
+#     by = {0|-h} + loc_y
+#     bz = -sin*sx*l/2 + cos*sz*w/2 + loc_z
+# then the X-axis remap (bx, bz, -by).
+CORNER_ARRAY_SQL = _corner_array_sql(named=True)
+# The same array with positional field names col1..col4, for a caller
+# that casts it to the named element type: viz.bbox_wireframe has
+# always built that tree, so its plan stays the same.
+CORNER_TUPLES_SQL = _corner_array_sql(named=False)
 
 
 def bbox_corners(labels: DataFrame) -> DataFrame:
@@ -229,12 +244,10 @@ def bbox_corners(labels: DataFrame) -> DataFrame:
     corners, already axis-aligned (reference get_3d_bbox,
     data_utils.py:111-137). Emitted as explode(array(struct x8)) —
     generator expressions, no UDF; geometry lives in
-    corner_structs()."""
-    return labels.select(
-        "frame_id",
-        "label",
-        F.explode(F.array(*corner_structs())).alias("c"),
-    ).select("frame_id", "label", "c.corner_idx", "c.cx", "c.cy", "c.cz")
+    CORNER_ARRAY_SQL."""
+    return labels.selectExpr(
+        "frame_id", "label", f"explode({CORNER_ARRAY_SQL}) AS c"
+    ).selectExpr("frame_id", "label", "c.corner_idx", "c.cx", "c.cy", "c.cz")
 
 
 # --------------------------------------------------------------------------
@@ -260,11 +273,38 @@ class AnalysisResult:
     maximal_area: tuple[tuple[float, ...], tuple[float, ...]]
 
 
-def _minmax(cols: list[str]) -> list[Column]:
-    out = []
-    for c in cols:
-        out += [F.min(c).alias(f"min_{c}"), F.max(c).alias(f"max_{c}")]
-    return out
+def _minmax(cols: list[str]) -> list[str]:
+    return [f"{f}({c}) AS {f}_{c}" for c in cols for f in ("min", "max")]
+
+
+_POINT_FOLD_SQL = (f"{_sorted_values('z')} AS zs", *_minmax(["x", "y", "z", "intensity"]))
+_LABEL_COLS_SQL = (
+    "frame_id", "dim_h", "dim_w", "dim_l",
+    "loc_x AS lx", "loc_y AS ly", "loc_z AS lz",
+    f"explode({CORNER_ARRAY_SQL}) AS c",
+)
+_LABEL_FOLD_SQL = tuple(
+    _minmax(["dim_h", "dim_w", "dim_l", "lx", "ly", "lz", "cx", "cy", "cz"])
+)
+
+
+def _fold(c: str, shifted: bool = False) -> list[str]:
+    lo, hi = f"min_{c}", f"max_{c}"
+    if shifted:  # z rescale on index 2 only (data_pipeline.py:29-41)
+        lo, hi = f"{lo} - z_scale", f"{hi} - z_scale"
+    return [f"min({lo}) AS min_{c}", f"max({hi}) AS max_{c}"]
+
+
+_ENVELOPE_FOLD_SQL = (
+    *_fold("x"), *_fold("y"), *_fold("z", True), *_fold("intensity"),
+    *_fold("dim_h"), *_fold("dim_w"), *_fold("dim_l"),
+    *_fold("lx"), *_fold("ly"), *_fold("lz", True),
+    *_fold("cx"), *_fold("cy"), *_fold("cz", True),
+)
+
+
+def _exprs(texts) -> list[Column]:
+    return [F.expr(t) for t in texts]
 
 
 def _envelope(
@@ -274,39 +314,17 @@ def _envelope(
     pts = axis_align(apply_calibration(points, calib_wide))
     frame_pts = (
         pts.groupBy("frame_id")
-        .agg(_sorted_values("z").alias("zs"), *_minmax(["x", "y", "z", "intensity"]))
-        .withColumn("z_scale", sorted_percentile(F.col("zs"), 0.05))
+        .agg(*_exprs(_POINT_FOLD_SQL))
+        .withColumn("z_scale", sorted_percentile("zs", 0.05))
     )
-
-    real = labels.filter(F.col("label") != "DontCare")
     frame_lbl = (
-        real.select(
-            "frame_id",
-            "dim_h",
-            "dim_w",
-            "dim_l",
-            F.col("loc_x").alias("lx"),
-            F.col("loc_y").alias("ly"),
-            F.col("loc_z").alias("lz"),
-            F.explode(F.array(*corner_structs())).alias("c"),
-        )
-        .select("*", "c.cx", "c.cy", "c.cz")
+        labels.filter("label != 'DontCare'")
+        .selectExpr(*_LABEL_COLS_SQL)
+        .selectExpr("*", "c.cx", "c.cy", "c.cz")
         .groupBy("frame_id")
-        .agg(*_minmax(["dim_h", "dim_w", "dim_l", "lx", "ly", "lz", "cx", "cy", "cz"]))
+        .agg(*_exprs(_LABEL_FOLD_SQL))
     )
-
-    def fold(c: str, shifted: bool = False) -> list[Column]:
-        lo, hi = F.col(f"min_{c}"), F.col(f"max_{c}")
-        if shifted:  # z rescale on index 2 only (data_pipeline.py:29-41)
-            lo, hi = lo - F.col("z_scale"), hi - F.col("z_scale")
-        return [F.min(lo).alias(f"min_{c}"), F.max(hi).alias(f"max_{c}")]
-
-    return frame_pts.join(frame_lbl, "frame_id", "left").agg(
-        *fold("x"), *fold("y"), *fold("z", True), *fold("intensity"),
-        *fold("dim_h"), *fold("dim_w"), *fold("dim_l"),
-        *fold("lx"), *fold("ly"), *fold("lz", True),
-        *fold("cx"), *fold("cy"), *fold("cz", True),
-    )
+    return frame_pts.join(frame_lbl, "frame_id", "left").agg(*_exprs(_ENVELOPE_FOLD_SQL))
 
 
 def analyze(
@@ -411,27 +429,30 @@ def cutout_filter(
     points: DataFrame, lo: tuple[float, float, float], hi: tuple[float, float, float]
 ) -> DataFrame:
     """Conjunctive 3-D box containment (reference P8,
-    data_pipeline.py:77-79) — six pushdown-friendly range predicates."""
-    return points.filter(
-        (F.col("x") > lo[0])
-        & (F.col("y") > lo[1])
-        & (F.col("z") > lo[2])
-        & (F.col("x") < hi[0])
-        & (F.col("y") < hi[1])
-        & (F.col("z") < hi[2])
-    )
+    data_pipeline.py:77-79) — six pushdown-friendly range predicates,
+    ANDed left to right (parenthesized: the SQL parser would otherwise
+    build a balanced AND tree)."""
+    preds = [f"{a} > {sql_number(v)}" for a, v in zip("xyz", lo)]
+    preds += [f"{a} < {sql_number(v)}" for a, v in zip("xyz", hi)]
+    cond = f"({preds[0]})"
+    for p in preds[1:]:
+        cond = f"({cond} AND ({p}))"
+    return points.filter(cond)
+
+
+_COUNT_STATS_SQL = (
+    "min(n) AS min_points",
+    "CAST(round(avg(n), 0) AS BIGINT) AS avg_points",
+    "max(n) AS max_points",
+    "count(1) AS n_frames",
+)
 
 
 def frame_count_stats(points: DataFrame) -> DataFrame:
     """Per-frame row counts folded to global min/avg/max (reference
     A6, data_pipeline.py:80-84; avg rounded like the print at :83)."""
-    per_frame = points.groupBy("frame_id").agg(F.count(F.lit(1)).alias("n"))
-    return per_frame.agg(
-        F.min("n").alias("min_points"),
-        F.round(F.avg("n"), 0).cast("long").alias("avg_points"),
-        F.max("n").alias("max_points"),
-        F.count(F.lit(1)).alias("n_frames"),
-    )
+    per_frame = points.groupBy("frame_id").agg(F.expr("count(1) AS n"))
+    return per_frame.agg(*_exprs(_COUNT_STATS_SQL))
 
 
 def cutout_pipeline(

@@ -23,7 +23,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from kittispark.operators.util import materialize
+from kittispark.operators.util import column_ref_sql, materialize
 
 # Deterministic pseudo-random hyperplanes: seeded LCG constants (no
 # runtime randomness — plans must be reproducible across runs).
@@ -72,30 +72,32 @@ def _unit_rows(m: "np.ndarray") -> "np.ndarray":
 _STATIC_DIM = 64
 
 
-def _qident(name: str) -> str:
-    """Backtick-quote a column name for the SQL-text builders."""
-    return "`" + name.replace("`", "``") + "`"
+def _refs(*cols: str | Column) -> list[str] | None:
+    """SQL text for each argument when every one names a column (a
+    name or a bare F.col reference), else None: the caller then builds
+    its expression Column by Column."""
+    refs = [column_ref_sql(c) for c in cols]
+    return None if None in refs else refs
 
 
 @functools.lru_cache(maxsize=None)
 def _vec_chain_sql(
-    kind: str, a: str, b: str | None = None, width: int = _STATIC_DIM
-) -> Column:
-    """The guarded static chain built as ONE F.expr parse instead of
-    ~1000 py4j round-trips (r12 finding: the r11 Column-by-Column
-    build cost ~380 ms of DRIVER time per call site per execution —
-    the bench reads it as a 2-3x regression on every vector query at
-    sf0.1, where driver-side plan construction dominates the sub-
-    second runtime; one parse is ~36 ms and the cache makes repeat
-    column names free). The parsed tree is CANONICALLY EQUAL to the
-    Column-built form (unit-tested in tests/test_plans.py), so
-    results, plans and generated code are bit-identical.
+    kind: str, ra: str, rb: str | None = None, width: int = _STATIC_DIM
+) -> str:
+    """The guarded static chain as SQL text, for ONE F.expr parse
+    instead of ~1000 py4j round-trips (r12 finding: the r11
+    Column-by-Column build cost ~380 ms of DRIVER time per call site
+    per execution — the bench reads it as a 2-3x regression on every
+    vector query at sf0.1, where driver-side plan construction
+    dominates the sub-second runtime; one parse is ~36 ms and the
+    cache makes repeat column names free). The parsed tree is
+    CANONICALLY EQUAL to the Column-built form (unit-tested in
+    tests/test_plans.py), so results, plans and generated code are
+    bit-identical.
 
-    Args are column NAMES (quoted into the SQL text); the returned
-    Column is an unresolved expression, safe to embed in any number
-    of plans."""
-    ra = _qident(a)
-    rb = _qident(b) if b is not None else None
+    Args are SQL column references (see _refs). The cache holds the
+    text, not a parsed Column: a Column is bound to one py4j gateway
+    and would go stale when the gateway restarts."""
     d = width
     if kind == "dot":
         chain = " + ".join(
@@ -106,7 +108,7 @@ def _vec_chain_sql(
             f"aggregate(zip_with({ra}, {rb}, (x, y) -> x * y), 0.0D,"
             " (acc, x) -> acc + x)"
         )
-        return F.expr(
+        return (
             f"CASE WHEN size({ra}) = {d} AND size({rb}) = {d}"
             f" THEN 0.0D + {chain} ELSE {fold} END"
         )
@@ -116,7 +118,7 @@ def _vec_chain_sql(
             for i in range(1, d + 1)
         )
         fold = f"SQRT(aggregate({ra}, 0.0D, (acc, x) -> acc + x * x))"
-        return F.expr(
+        return (
             f"CASE WHEN size({ra}) = {d}"
             f" THEN SQRT(0.0D + {chain}) ELSE {fold} END"
         )
@@ -130,7 +132,7 @@ def _vec_chain_sql(
             f"aggregate(zip_with({ra}, {rb}, (x, y) -> (x - y) * (x - y)),"
             " 0.0D, (acc, x) -> acc + x)"
         )
-        return F.expr(
+        return (
             f"CASE WHEN size({ra}) = {d} AND size({rb}) = {d}"
             f" THEN 0.0D + {chain} ELSE {fold} END"
         )
@@ -151,9 +153,12 @@ def dot(a: str | Column, b: str | Column, width: int = _STATIC_DIM) -> Column:
     interpreted fold, scores their rows). Pass column NAMES (strings)
     on hot paths: the name form builds the chain in one cached parse;
     the Column form pays the py4j round-trip build (kept for
-    composed/derived column expressions)."""
-    if isinstance(a, str) and isinstance(b, str):
-        return _vec_chain_sql("dot", a, b, width)
+    composed/derived column expressions). A bare F.col(name) counts
+    as a name, so mixed calls like dot("qv", F.col("cv")) parse once
+    too."""
+    refs = _refs(a, b)
+    if refs is not None:
+        return F.expr(_vec_chain_sql("dot", *refs, width))
     out = F.lit(0.0)
     for i in range(1, width + 1):
         out = out + F.element_at(a, F.lit(i)) * F.element_at(b, F.lit(i))
@@ -167,8 +172,9 @@ def _norm_fold(a: Column) -> Column:
 
 
 def norm(a: str | Column, width: int = _STATIC_DIM) -> Column:
-    if isinstance(a, str):
-        return _vec_chain_sql("norm", a, None, width)
+    refs = _refs(a)
+    if refs is not None:
+        return F.expr(_vec_chain_sql("norm", *refs, None, width))
     out = F.lit(0.0)
     for i in range(1, width + 1):
         x = F.element_at(a, F.lit(i))
@@ -865,14 +871,11 @@ def kmeans_centroids(
 
 
 @functools.lru_cache(maxsize=None)
-def _d2_static_sql(a: str, b: str, n: int) -> Column:
-    ra, rb = _qident(a), _qident(b)
-    return F.expr(
-        " + ".join(
-            f"(element_at({ra}, {i}) - element_at({rb}, {i}))"
-            f" * (element_at({ra}, {i}) - element_at({rb}, {i}))"
-            for i in range(1, n + 1)
-        )
+def _d2_static_sql(ra: str, rb: str, n: int) -> str:
+    return " + ".join(
+        f"(element_at({ra}, {i}) - element_at({rb}, {i}))"
+        f" * (element_at({ra}, {i}) - element_at({rb}, {i}))"
+        for i in range(1, n + 1)
     )
 
 
@@ -887,8 +890,9 @@ def d2_static(a: str | Column, b: str | Column, n: int) -> Column:
     a mismatch fails loudly (ANSI INVALID_ARRAY_INDEX), never
     truncates. Pass column NAMES on hot paths (one cached parse,
     see _vec_chain_sql)."""
-    if isinstance(a, str) and isinstance(b, str):
-        return _d2_static_sql(a, b, n)
+    refs = _refs(a, b)
+    if refs is not None:
+        return F.expr(_d2_static_sql(*refs, n))
     out = None
     for i in range(1, n + 1):
         d = F.element_at(a, F.lit(i)) - F.element_at(b, F.lit(i))
@@ -905,8 +909,9 @@ def fold_d2(a: str | Column, b: str | Column) -> Column:
     codegen fast path (same association + 0.0 seed; squares are never
     -0.0, but the seed keeps the forms textually aligned). Pass
     column NAMES on hot paths (one cached parse, see _vec_chain_sql)."""
-    if isinstance(a, str) and isinstance(b, str):
-        return _vec_chain_sql("d2", a, b)
+    refs = _refs(a, b)
+    if refs is not None:
+        return F.expr(_vec_chain_sql("d2", *refs))
     out = F.lit(0.0)
     for i in range(1, _STATIC_DIM + 1):
         d = F.element_at(a, F.lit(i)) - F.element_at(b, F.lit(i))

@@ -2,10 +2,58 @@
 
 from __future__ import annotations
 
+import math
 import os
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.storagelevel import StorageLevel
+
+# SQL-text expression builders. An expression assembled Column by
+# Column costs the driver a py4j round-trip per node (~3-17 commands
+# per function call, alias or column reference); the same tree written
+# as SQL text and handed to F.expr / selectExpr / filter is ONE parse
+# on the JVM. Cache the TEXT, never the parsed Column: a Column is a
+# handle into one gateway and goes stale when the gateway restarts.
+
+
+def qident(name: str) -> str:
+    """Backtick-quote a column name for SQL text."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def column_ref_sql(c: str | Column) -> str | None:
+    """SQL text for the column `c` names: a name is quoted whole; a
+    Column that is a bare column reference (F.col(name)) gives its own
+    SQL text. None for any other Column: an expression, or a reference
+    bound to one DataFrame (df["x"]), which SQL text cannot express."""
+    if isinstance(c, str):
+        return qident(c)
+    node = c._jc.node()
+    if node.getClass().getSimpleName() != "UnresolvedAttribute":
+        return None
+    return node.sql()
+
+
+def sql_string(s: str) -> str:
+    """A Spark SQL string literal holding exactly `s`."""
+    return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
+def sql_number(v: int | float) -> str:
+    """A Spark SQL literal typed as F.lit(v) types it: an int parses as
+    INT (BIGINT when it needs 64 bits; a bool as BOOLEAN), anything
+    else as a DOUBLE with the exact value (repr round-trips every
+    finite double). SQL has no non-finite double literal, so NaN and
+    +/-inf are a cast of a string constant, which constant folding
+    turns into the same literal."""
+    if isinstance(v, int):
+        return str(v)
+    f = float(v)
+    if math.isfinite(f):
+        return f"{float.__repr__(f)}D"
+    name = "NaN" if math.isnan(f) else ("Infinity" if f > 0 else "-Infinity")
+    return f"CAST('{name}' AS DOUBLE)"
+
 
 # How iterative / shared-frontier operators pin an intermediate result
 # (conf `kittispark.materialize.mode`, or env KITTISPARK_MATERIALIZE):

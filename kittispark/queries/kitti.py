@@ -202,7 +202,7 @@ _WF_EDGE_VALUES = ", ".join(
     "operator on part-synthesized boxes (6 parts per frame, 3 "
     "classes, so the deterministic box_idx ordinal is exercised at "
     ">= 2 boxes per (frame, class)). Plan: corners as an inline "
-    "struct array (shared corner_structs geometry), edge table as a "
+    "struct array (the shared operators.kitti corner geometry), edge table as a "
     "literal array explode, endpoints via element_at — zero joins, "
     "zero shuffles, whole-stage codegen; the only window is the "
     "per-frame box ordinal over tens of rows per frame. The oracle "

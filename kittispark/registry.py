@@ -108,7 +108,27 @@ def _load_all() -> None:
 # but every NEVER-adjudicated query outranks them for window slots:
 # these already carry exhaustive local multi-SF verification of the
 # new form, the truly-fresh ones have no driver signal at all.
-_REVERIFY: frozenset[str] = frozenset({"kitti_analysis_envelope"})
+_REVERIFY: frozenset[str] = frozenset(
+    {
+        "kitti_analysis_envelope",
+        "kitti_calib_chain",
+        "kitti_cutout_roundtrip",
+        "kitti_label_file_scan",
+        "wireframe_edge_segments",
+    }
+)
+# r13: kitti_calib_chain, kitti_cutout_roundtrip, kitti_label_file_scan
+# and wireframe_edge_segments queued — the KITTI and viewer expressions
+# they run (calib_matrices, apply_calibration, axis_align,
+# cutout_filter, frame_count_stats, read_labels' projection, the
+# corner array and viz.bbox_wireframe) are now SQL text parsed once
+# per call instead of Column-by-Column builds. Each analyzes to the
+# same tree as the Column form it replaced (canonically equal and
+# equal as printed; tests/test_kitti_golden.py keeps those forms) and
+# passes local oracle parity, but the banked greens predate the
+# rewrite. They and kitti_analysis_envelope (below; its
+# sorted_percentile is now SQL text as well) are the registered
+# queries that reach the rewritten builders.
 # r13: kitti_analysis_envelope queued — frame_z_scale's exact branch
 # (which it runs, with rescale_z on its output) now reads Spark's
 # percentile formula off a sorted collect_list instead of the

@@ -24,6 +24,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from kittispark.operators.util import sql_string
+
 _FRAME_FROM_PATH = r"([^/]+)\.[a-z]+$"
 
 POINTS_SCHEMA = T.StructType(
@@ -90,45 +92,55 @@ def read_points(spark: SparkSession, pocl_dir: str) -> DataFrame:
     return files.mapInPandas(decode, POINTS_SCHEMA)
 
 
+_FRAME_ID_FROM_FILE_SQL = (
+    f"regexp_extract(input_file_name(), {sql_string(_FRAME_FROM_PATH)}, 1)"
+)
+
+
 def frame_id_from_file():
     """Frame id extracted from input_file_name() — THE join-key
     convention every file-backed source shares (see frame_id_col for
     the path-column variant)."""
-    return F.regexp_extract(F.input_file_name(), _FRAME_FROM_PATH, 1)
+    return F.expr(_FRAME_ID_FROM_FILE_SQL)
+
+
+# read_labels' projections as SQL text (one parse each per call; see
+# kittispark.operators.util). Trim before the split: Python
+# str.split() (the reference semantics) ignores leading whitespace,
+# but split(\s+) on an untrimmed line yields a leading "" that
+# silently shifts all 15 fields by one.
+_LABEL_LINE_SQL = (
+    f"{_FRAME_ID_FROM_FILE_SQL} AS frame_id",
+    "split(trim(value), " + sql_string(r"\s+") + ") AS f",
+)
+_LABEL_FIELDS_SQL = (
+    "frame_id",
+    "element_at(f, 1) AS label",
+    "CAST(element_at(f, 2) AS DOUBLE) AS truncated",
+    "CAST(element_at(f, 3) AS INT) AS occluded",
+    "CAST(element_at(f, 4) AS DOUBLE) AS alpha",
+    "array("
+    + ", ".join(f"CAST(element_at(f, {i}) AS DOUBLE)" for i in (5, 6, 7, 8))
+    + ") AS bbox",
+    *(
+        f"CAST(element_at(f, {i}) AS DOUBLE) AS {name}"
+        for i, name in enumerate(
+            ("dim_h", "dim_w", "dim_l", "loc_x", "loc_y", "loc_z", "rotation_y"), 9
+        )
+    ),
+)
 
 
 def read_labels(spark: SparkSession, label_dir: str) -> DataFrame:
     """S3: whitespace-delimited 15-field KITTI label lines -> typed
     rows (reference data_utils.py:17-33). Pure text scan + positional
     split/cast — no Python in the path."""
-    lines = (
+    return (
         spark.read.option("pathGlobFilter", "*.txt")
         .text(label_dir)
-        .select(
-            frame_id_from_file().alias("frame_id"),
-            # trim first: Python str.split() (the reference semantics)
-            # ignores leading whitespace, but split(\s+) on an
-            # untrimmed line yields a leading "" that silently shifts
-            # all 15 fields by one
-            F.split(F.trim(F.col("value")), r"\s+").alias("f"),
-        )
-        .filter(F.size("f") >= 15)
-    )
-    d = F.element_at
-    return lines.select(
-        "frame_id",
-        d("f", 1).alias("label"),
-        d("f", 2).cast("double").alias("truncated"),
-        d("f", 3).cast("int").alias("occluded"),
-        d("f", 4).cast("double").alias("alpha"),
-        F.array(*[d("f", i).cast("double") for i in (5, 6, 7, 8)]).alias("bbox"),
-        d("f", 9).cast("double").alias("dim_h"),
-        d("f", 10).cast("double").alias("dim_w"),
-        d("f", 11).cast("double").alias("dim_l"),
-        d("f", 12).cast("double").alias("loc_x"),
-        d("f", 13).cast("double").alias("loc_y"),
-        d("f", 14).cast("double").alias("loc_z"),
-        d("f", 15).cast("double").alias("rotation_y"),
+        .selectExpr(*_LABEL_LINE_SQL)
+        .filter("size(f) >= 15")
+        .selectExpr(*_LABEL_FIELDS_SQL)
     )
 
 

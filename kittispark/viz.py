@@ -17,6 +17,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from kittispark.operators.kitti import CORNER_TUPLES_SQL
+from kittispark.operators.util import sql_string
+
 # Class colors matching the reference's BBOX_COLORS presentation
 # table (visualize.py:10-20) value-for-value, so a figure rendered
 # from this engine is indistinguishable from the reference's — the
@@ -45,6 +48,47 @@ WIREFRAME_EDGES = (
     (0, 1), (1, 2), (2, 3), (3, 0),
     (4, 5), (5, 6), (6, 7), (7, 4),
     (0, 4), (1, 5), (2, 6), (3, 7),
+)
+
+
+def _color_sql() -> str:
+    """The class colour as nested CASEs: the last BBOX_COLORS entry
+    outermost, each falling through to the next, and finally to the
+    label itself."""
+    sql = "label"
+    for cls, col in BBOX_COLORS.items():
+        sql = f"CASE WHEN label = {sql_string(cls)} THEN {sql_string(col)} ELSE {sql} END"
+    return sql
+
+
+# The wireframe's SQL text, built once. The 12-edge index table is a
+# literal struct array.
+_EDGES_SQL = "array(" + ", ".join(
+    f"struct({e} AS edge_idx, {a} AS a, {b} AS b)"
+    for e, (a, b) in enumerate(WIREFRAME_EDGES)
+) + ")"
+# deterministic per-box ordinal within (frame, class): order by the
+# box's full attribute tuple (bounded per frame — tens of boxes — so
+# the window is never a scale concern)
+_BOX_IDX_SQL = (
+    "row_number() OVER (PARTITION BY frame_id, label ORDER BY"
+    " loc_x, loc_y, loc_z, rotation_y, dim_h, dim_w, dim_l) - 1"
+)
+# the corner array cast to its named element type
+_WIRE_EXPAND_SQL = (
+    "frame_id", "label", "box_idx",
+    f"CAST({CORNER_TUPLES_SQL} AS"
+    " array<struct<corner_idx:int,cx:double,cy:double,cz:double>>) AS __cs",
+    f"explode({_EDGES_SQL}) AS e",
+)
+_WIRE_SEGMENTS_SQL = (
+    "frame_id", "label", "box_idx", "e.edge_idx AS edge_idx",
+    *(
+        f"element_at(__cs, e.{end} + 1).c{axis} AS {axis}{n}"
+        for n, end in ((1, "a"), (2, "b"))
+        for axis in "xyz"
+    ),
+    f"{_color_sql()} AS color",
 )
 
 # Mesh3d triangle index triples for a 4-vertex rectangle in the
@@ -98,71 +142,25 @@ def bbox_wireframe(
     BBOX_COLORS entry for the box's class.
 
     Plan shape: the 8 corners are built per label row as an inline
-    struct array (corner_structs — no shuffle, no UDF), the 12-edge
-    index table is a LITERAL array exploded per row, and each edge
-    reads its two endpoints with element_at. Zero joins, zero
-    shuffles — pure whole-stage-codegen row expansion (x12), so it
-    scales to any label volume. The color map is a 9-entry literal
-    CASE, a broadcast-dimension in spirit (reference J3).
+    struct array (operators.kitti's corner geometry, CORNER_TUPLES_SQL
+    — no shuffle, no UDF), the 12-edge index table is a LITERAL array
+    exploded per row, and each edge reads its two endpoints with
+    element_at. Zero joins, zero shuffles — pure whole-stage-codegen
+    row expansion (x12), so it scales to any label volume. The color
+    map is a 9-entry literal CASE, a broadcast-dimension in spirit
+    (reference J3). All of it is SQL text built at import, so a call
+    costs a handful of parses, not a py4j round-trip per node.
 
     Output: frame_id, label, box_idx (ordinal of the box within its
     (frame, class) group — a deterministic id derived from the
     label's own attributes, not a nondeterministic row id), edge_idx,
     x1, y1, z1, x2, y2, z2, color."""
-    from pyspark.sql import Window as W
-
-    from kittispark.operators.kitti import corner_structs
-
-    # deterministic per-box ordinal within (frame, class): order by
-    # the box's full attribute tuple (bounded per frame — tens of
-    # boxes — so the window is never a scale concern)
-    w = W.partitionBy("frame_id", "label").orderBy(
-        "loc_x", "loc_y", "loc_z", "rotation_y", "dim_h", "dim_w", "dim_l"
-    )
-    edges = F.array(
-        *[
-            F.struct(
-                F.lit(e).alias("edge_idx"),
-                F.lit(a).alias("a"),
-                F.lit(b).alias("b"),
-            )
-            for e, (a, b) in enumerate(WIREFRAME_EDGES)
-        ]
-    )
-    color = F.col("label")
-    for cls, col in BBOX_COLORS.items():
-        color = F.when(F.col("label") == cls, F.lit(col)).otherwise(color)
-    start, end = F.col("e.a") + 1, F.col("e.b") + 1
-    cs = F.col("__cs")
+    classes = ", ".join(map(sql_string, include_classes))
     return (
-        labels.filter(F.col("label").isin(*include_classes))
-        .withColumn("box_idx", F.row_number().over(w) - 1)
-        .select(
-            "frame_id",
-            "label",
-            "box_idx",
-            # explicit cast: array() merges the 8 struct element types
-            # and can drop field names in the merge — pin the schema
-            F.array(*corner_structs())
-            .cast(
-                "array<struct<corner_idx:int,cx:double,cy:double,cz:double>>"
-            )
-            .alias("__cs"),
-            F.explode(edges).alias("e"),
-        )
-        .select(
-            "frame_id",
-            "label",
-            "box_idx",
-            F.col("e.edge_idx").alias("edge_idx"),
-            F.element_at(cs, start).cx.alias("x1"),
-            F.element_at(cs, start).cy.alias("y1"),
-            F.element_at(cs, start).cz.alias("z1"),
-            F.element_at(cs, end).cx.alias("x2"),
-            F.element_at(cs, end).cy.alias("y2"),
-            F.element_at(cs, end).cz.alias("z2"),
-            color.alias("color"),
-        )
+        labels.filter(f"label IN ({classes})" if classes else "false")
+        .withColumn("box_idx", F.expr(_BOX_IDX_SQL))
+        .selectExpr(*_WIRE_EXPAND_SQL)
+        .selectExpr(*_WIRE_SEGMENTS_SQL)
     )
 
 

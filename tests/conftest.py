@@ -20,3 +20,25 @@ def spark():
     spark = get_spark("kittispark-tests", cpus=8, shuffle_partitions=8)
     yield spark
     spark.stop()
+
+
+@pytest.fixture
+def py4j_commands(spark):
+    """Counts the py4j commands the driver sends to the JVM while the
+    test runs (`.n`): every call, field read, object release and
+    reflection lookup is one round-trip on the gateway."""
+    import types
+
+    client = spark.sparkContext._gateway._gateway_client
+    send = client.send_command
+    counter = types.SimpleNamespace(n=0)
+
+    def counting(*args, **kwargs):
+        counter.n += 1
+        return send(*args, **kwargs)
+
+    client.send_command = counting
+    try:
+        yield counter
+    finally:
+        client.send_command = send

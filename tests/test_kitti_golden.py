@@ -26,6 +26,7 @@ from kittispark.operators.kitti import (
 from kittispark.sinks import summary_sink, write_frames, write_kitti_bins
 from kittispark.sources.kitti import read_calib, read_labels, read_points
 from tests.kitti_fixture import golden_analysis, golden_cutout, make_fixture
+from tests.plan_equality import assert_same_analyzed
 
 
 @pytest.fixture(scope="module")
@@ -524,3 +525,344 @@ def test_analyze_edge_frames_golden(spark, tmp_path):
         np.testing.assert_allclose(getattr(got, field), want[field], rtol=1e-9, err_msg=field)
     assert got.minimal_area == tuple(map(tuple, want["minimal_area"]))
     assert got.maximal_area == tuple(map(tuple, want["maximal_area"]))
+
+
+# ---------------------------------------------------------------------------
+# SQL-text builders vs the Column-built forms they replaced
+# ---------------------------------------------------------------------------
+# The KITTI and viewer expressions are SQL text parsed once per call.
+# Below are the Column-by-Column builders they replaced, kept as the
+# reference: each new form must analyze to the same tree
+# (tests/plan_equality.py).
+
+_X_SIGNS = (-1, 1, 1, -1, -1, 1, 1, -1)
+_Y_TOP = (0, 0, 0, 0, 1, 1, 1, 1)
+_Z_SIGNS = (-1, -1, 1, 1, -1, -1, 1, 1)
+
+
+def _col_corner_structs() -> list:
+    c, s = F.cos("rotation_y"), F.sin("rotation_y")
+    corners = []
+    for i in range(8):
+        xo = F.lit(_X_SIGNS[i]) * F.col("dim_l") / 2
+        yo = F.lit(-_Y_TOP[i]) * F.col("dim_h")
+        zo = F.lit(_Z_SIGNS[i]) * F.col("dim_w") / 2
+        bx = c * xo + s * zo + F.col("loc_x")
+        by = yo + F.col("loc_y")
+        bz = -s * xo + c * zo + F.col("loc_z")
+        corners.append(
+            F.struct(
+                F.lit(i).alias("corner_idx"),
+                bx.alias("cx"),
+                bz.alias("cy"),
+                (-by).alias("cz"),
+            )
+        )
+    return corners
+
+
+def _col_calib_matrices(calib_tall):
+    tr = calib_tall.filter(F.col("key") == "Tr_velo_to_cam").select(
+        "frame_id",
+        *[F.element_at("values", i + 1).alias(f"t{i // 4}{i % 4}") for i in range(12)],
+    )
+    r0 = calib_tall.filter(F.col("key") == "R0_rect").select(
+        "frame_id",
+        *[F.element_at("values", i + 1).alias(f"r{i // 3}{i % 3}") for i in range(9)],
+    )
+    return tr.join(r0, "frame_id")
+
+
+def _col_apply_calibration(points, calib_wide):
+    j = points.join(F.broadcast(calib_wide), "frame_id")
+    cam = [
+        F.col(f"t{k}0") * F.col("x")
+        + F.col(f"t{k}1") * F.col("y")
+        + F.col(f"t{k}2") * F.col("z")
+        + F.col(f"t{k}3")
+        for k in range(3)
+    ]
+    rect = [
+        F.col(f"r{i}0") * cam[0] + F.col(f"r{i}1") * cam[1] + F.col(f"r{i}2") * cam[2]
+        for i in range(3)
+    ]
+    return j.select(
+        "frame_id", rect[0].alias("x"), rect[1].alias("y"), rect[2].alias("z"), "intensity"
+    )
+
+
+def _col_axis_align(df, x="x", y="y", z="z"):
+    others = [c for c in df.columns if c not in (x, y, z)]
+    return df.select(
+        *others, F.col(x).alias(x), F.col(z).alias(y), (-F.col(y)).alias(z)
+    ).select(*df.columns)
+
+
+def _col_minmax(cols):
+    out = []
+    for c in cols:
+        out += [F.min(c).alias(f"min_{c}"), F.max(c).alias(f"max_{c}")]
+    return out
+
+
+def _col_sorted_percentile(zs, percentage):
+    pos = (F.size(zs) - 1).cast("double") * F.lit(percentage)
+    lo, hi = F.floor(pos), F.ceil(pos)
+    v_lo, v_hi = F.get(zs, lo.cast("int")), F.get(zs, hi.cast("int"))
+    return F.when(v_lo == v_hi, v_lo).otherwise((hi - pos) * v_lo + (pos - lo) * v_hi)
+
+
+def _col_envelope(points, labels, calib_wide):
+    pts = _col_axis_align(_col_apply_calibration(points, calib_wide))
+    frame_pts = (
+        pts.groupBy("frame_id")
+        .agg(
+            F.sort_array(F.collect_list(F.col("z").cast("double"))).alias("zs"),
+            *_col_minmax(["x", "y", "z", "intensity"]),
+        )
+        .withColumn("z_scale", _col_sorted_percentile(F.col("zs"), 0.05))
+    )
+    frame_lbl = (
+        labels.filter(F.col("label") != "DontCare")
+        .select(
+            "frame_id", "dim_h", "dim_w", "dim_l",
+            F.col("loc_x").alias("lx"), F.col("loc_y").alias("ly"), F.col("loc_z").alias("lz"),
+            F.explode(F.array(*_col_corner_structs())).alias("c"),
+        )
+        .select("*", "c.cx", "c.cy", "c.cz")
+        .groupBy("frame_id")
+        .agg(*_col_minmax(["dim_h", "dim_w", "dim_l", "lx", "ly", "lz", "cx", "cy", "cz"]))
+    )
+
+    def fold(c, shifted=False):
+        lo, hi = F.col(f"min_{c}"), F.col(f"max_{c}")
+        if shifted:
+            lo, hi = lo - F.col("z_scale"), hi - F.col("z_scale")
+        return [F.min(lo).alias(f"min_{c}"), F.max(hi).alias(f"max_{c}")]
+
+    return frame_pts.join(frame_lbl, "frame_id", "left").agg(
+        *fold("x"), *fold("y"), *fold("z", True), *fold("intensity"),
+        *fold("dim_h"), *fold("dim_w"), *fold("dim_l"),
+        *fold("lx"), *fold("ly"), *fold("lz", True),
+        *fold("cx"), *fold("cy"), *fold("cz", True),
+    )
+
+
+def _col_cutout_filter(points, lo, hi):
+    return points.filter(
+        (F.col("x") > lo[0])
+        & (F.col("y") > lo[1])
+        & (F.col("z") > lo[2])
+        & (F.col("x") < hi[0])
+        & (F.col("y") < hi[1])
+        & (F.col("z") < hi[2])
+    )
+
+
+def _col_frame_count_stats(points):
+    per_frame = points.groupBy("frame_id").agg(F.count(F.lit(1)).alias("n"))
+    return per_frame.agg(
+        F.min("n").alias("min_points"),
+        F.round(F.avg("n"), 0).cast("long").alias("avg_points"),
+        F.max("n").alias("max_points"),
+        F.count(F.lit(1)).alias("n_frames"),
+    )
+
+
+def _col_bbox_wireframe(labels, include_classes):
+    from pyspark.sql import Window as W
+
+    from kittispark.viz import BBOX_COLORS, WIREFRAME_EDGES
+
+    w = W.partitionBy("frame_id", "label").orderBy(
+        "loc_x", "loc_y", "loc_z", "rotation_y", "dim_h", "dim_w", "dim_l"
+    )
+    edges = F.array(
+        *[
+            F.struct(F.lit(e).alias("edge_idx"), F.lit(a).alias("a"), F.lit(b).alias("b"))
+            for e, (a, b) in enumerate(WIREFRAME_EDGES)
+        ]
+    )
+    color = F.col("label")
+    for cls, col in BBOX_COLORS.items():
+        color = F.when(F.col("label") == cls, F.lit(col)).otherwise(color)
+    start, end = F.col("e.a") + 1, F.col("e.b") + 1
+    cs = F.col("__cs")
+    return (
+        labels.filter(F.col("label").isin(*include_classes))
+        .withColumn("box_idx", F.row_number().over(w) - 1)
+        .select(
+            "frame_id", "label", "box_idx",
+            F.array(*_col_corner_structs())
+            .cast("array<struct<corner_idx:int,cx:double,cy:double,cz:double>>")
+            .alias("__cs"),
+            F.explode(edges).alias("e"),
+        )
+        .select(
+            "frame_id", "label", "box_idx",
+            F.col("e.edge_idx").alias("edge_idx"),
+            F.element_at(cs, start).cx.alias("x1"),
+            F.element_at(cs, start).cy.alias("y1"),
+            F.element_at(cs, start).cz.alias("z1"),
+            F.element_at(cs, end).cx.alias("x2"),
+            F.element_at(cs, end).cy.alias("y2"),
+            F.element_at(cs, end).cz.alias("z2"),
+            color.alias("color"),
+        )
+    )
+
+
+def _col_read_labels(spark, label_dir):
+    lines = (
+        spark.read.option("pathGlobFilter", "*.txt")
+        .text(label_dir)
+        .select(
+            F.regexp_extract(F.input_file_name(), r"([^/]+)\.[a-z]+$", 1).alias("frame_id"),
+            F.split(F.trim(F.col("value")), r"\s+").alias("f"),
+        )
+        .filter(F.size("f") >= 15)
+    )
+    d = F.element_at
+    return lines.select(
+        "frame_id",
+        d("f", 1).alias("label"),
+        d("f", 2).cast("double").alias("truncated"),
+        d("f", 3).cast("int").alias("occluded"),
+        d("f", 4).cast("double").alias("alpha"),
+        F.array(*[d("f", i).cast("double") for i in (5, 6, 7, 8)]).alias("bbox"),
+        *[
+            d("f", i).cast("double").alias(name)
+            for i, name in enumerate(
+                ("dim_h", "dim_w", "dim_l", "loc_x", "loc_y", "loc_z", "rotation_y"), 9
+            )
+        ],
+    )
+
+
+def _col_read_calib(spark, calib_dir):
+    parts = F.split("value", ":", 2)
+    return (
+        spark.read.option("pathGlobFilter", "*.txt")
+        .text(calib_dir)
+        .select(
+            F.regexp_extract(F.input_file_name(), r"([^/]+)\.[a-z]+$", 1).alias("frame_id"),
+            F.trim(F.get(parts, 0)).alias("key"),
+            F.transform(
+                F.split(F.trim(F.get(parts, 1)), r"\s+"), lambda v: v.cast("double")
+            ).alias("values"),
+        )
+        .filter(F.col("values").isNotNull())
+    )
+
+
+def test_sql_text_builders_equal_column_forms(spark, fixture, loaded):
+    from kittispark.operators.kitti import CORNER_ARRAY_SQL, _envelope, sorted_percentile
+    from kittispark.viz import DEFAULT_CLASSES, bbox_wireframe
+
+    root, _ = fixture
+    _, points, labels, calib = loaded
+    calib_tall = read_calib(spark, f"{root}/calib")
+    zs = points.groupBy("frame_id").agg(F.sort_array(F.collect_list("z")).alias("zs"))
+    cases = {
+        f"sorted_percentile_{p}": (
+            zs.select(sorted_percentile(ref, p).alias("v")),
+            zs.select(_col_sorted_percentile(F.col("zs"), p).alias("v")),
+        )
+        for p, ref in ((0, "zs"), (0.05, "zs"), (0.33, F.col("zs")), (1.0, "zs"))
+    }
+    cases |= {
+        "read_labels": (
+            read_labels(spark, f"{root}/label_2"),
+            _col_read_labels(spark, f"{root}/label_2"),
+        ),
+        "read_calib": (calib_tall, _col_read_calib(spark, f"{root}/calib")),
+        "corner_array": (
+            labels.select(F.expr(CORNER_ARRAY_SQL).alias("cs")),
+            labels.select(F.array(*_col_corner_structs()).alias("cs")),
+        ),
+        "bbox_corners": (
+            bbox_corners(labels),
+            labels.select(
+                "frame_id", "label", F.explode(F.array(*_col_corner_structs())).alias("c")
+            ).select("frame_id", "label", "c.corner_idx", "c.cx", "c.cy", "c.cz"),
+        ),
+        "calibration": (
+            axis_align(apply_calibration(points, calib_matrices(calib_tall))),
+            _col_axis_align(_col_apply_calibration(points, _col_calib_matrices(calib_tall))),
+        ),
+        "envelope": (_envelope(points, labels, calib), _col_envelope(points, labels, calib)),
+        "wireframe": (
+            bbox_wireframe(labels),
+            _col_bbox_wireframe(labels, DEFAULT_CLASSES),
+        ),
+        "wireframe_classes": (
+            bbox_wireframe(labels, ("Car", "it's")),
+            _col_bbox_wireframe(labels, ("Car", "it's")),
+        ),
+        "count_stats": (frame_count_stats(points), _col_frame_count_stats(points)),
+    }
+    # the bounds analyze hands the cut-out: negative, integral and
+    # tiny doubles, plus plain ints
+    for i, (lo, hi) in enumerate(
+        [
+            ((-15.0, -15.5, -2.0), (15.0, 1e-300, 3.25)),
+            ((0.1, -0.0, 2.5e20), (1.5, 2.0, 3.0)),
+            ((-1, 0, 5000000000), (1, 2, 3)),
+        ]
+    ):
+        cases[f"cutout_filter_{i}"] = (
+            cutout_filter(points, lo, hi),
+            _col_cutout_filter(points, lo, hi),
+        )
+    for name, (new, old) in cases.items():
+        try:
+            assert_same_analyzed(new, old)
+        except AssertionError as e:
+            raise AssertionError(f"{name}: SQL-text form diverged from the Column form") from e
+    # no classes: SQL has no empty IN list, so the filter is `false`
+    assert bbox_wireframe(labels, ()).count() == 0
+
+
+def test_sql_text_builders_bound_py4j_commands(spark, loaded, py4j_commands):
+    """A warm build of the viewer's wireframe, analyze's envelope and
+    the E2 cut-out sends at most a quarter of the py4j commands the
+    Column-by-Column builders sent (4942, 6398 and 2527 on the
+    kitti_cutout inputs), whatever the data."""
+    import gc
+
+    from kittispark.operators.kitti import _envelope
+    from kittispark.viz import bbox_wireframe
+
+    _, points, labels, calib = loaded
+    builds = {
+        "bbox_wireframe": (lambda: bbox_wireframe(labels), 4942 // 4),
+        "_envelope": (lambda: _envelope(points, labels, calib), 6398 // 4),
+        "cutout_pipeline": (
+            lambda: cutout_pipeline(points, calib, (-15.0, -15.0, -2.0), (15.0, 15.0, 3.0)),
+            2527 // 4,
+        ),
+    }
+    for name, (build, bound) in builds.items():
+        build()  # warm: first-use reflection lookups
+        gc.collect()
+        n0 = py4j_commands.n
+        build()
+        gc.collect()  # count the releases of the build's JVM handles too
+        sent = py4j_commands.n - n0
+        assert 0 < sent <= bound, f"{name}: {sent} py4j commands (bound {bound})"
+
+
+def test_sql_text_builders_keep_no_module_level_column():
+    # a Column is a handle into one py4j gateway and goes stale when
+    # the gateway restarts: the builders cache SQL text, not Columns
+    import importlib
+
+    from pyspark.sql import Column
+
+    for name in ("kittispark.operators.kitti", "kittispark.viz", "kittispark.sources.kitti"):
+        mod = importlib.import_module(name)
+        held = [k for k, v in vars(mod).items() if isinstance(v, Column)]
+        assert not held, f"{name} holds Columns: {held}"
+    from kittispark.operators.kitti import CORNER_ARRAY_SQL, CORNER_TUPLES_SQL
+
+    assert isinstance(CORNER_ARRAY_SQL, str) and isinstance(CORNER_TUPLES_SQL, str)

@@ -18,6 +18,7 @@ import re
 import pytest
 
 from kittispark import registry
+from tests.plan_equality import assert_same_analyzed
 
 SF = "/root/testdata/sf0.001"
 
@@ -1208,16 +1209,63 @@ def test_analysis_envelope_broadcast_combine_shape(plans):
     assert shuffle_exchanges(plan) <= 2
 
 
+# The Column-by-Column vector chains that r11 built and r12 replaced
+# with one cached SQL-text parse: the reference trees the parsed forms
+# must equal.
+def _col_dot(a, b, width=64):
+    from pyspark.sql import functions as F
+
+    out = F.lit(0.0)
+    for i in range(1, width + 1):
+        out = out + F.element_at(a, F.lit(i)) * F.element_at(b, F.lit(i))
+    fold = F.aggregate(F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x)
+    return F.when((F.size(a) == width) & (F.size(b) == width), out).otherwise(fold)
+
+
+def _col_norm(a, width=64):
+    from pyspark.sql import functions as F
+
+    out = F.lit(0.0)
+    for i in range(1, width + 1):
+        x = F.element_at(a, F.lit(i))
+        out = out + x * x
+    fold = F.sqrt(F.aggregate(a, F.lit(0.0), lambda acc, x: acc + x * x))
+    return F.when(F.size(a) == width, F.sqrt(out)).otherwise(fold)
+
+
+def _col_fold_d2(a, b):
+    from pyspark.sql import functions as F
+
+    out = F.lit(0.0)
+    for i in range(1, 65):
+        d = F.element_at(a, F.lit(i)) - F.element_at(b, F.lit(i))
+        out = out + d * d
+    fold = F.aggregate(
+        F.zip_with(a, b, lambda x, y: (x - y) * (x - y)), F.lit(0.0), lambda acc, x: acc + x
+    )
+    return F.when((F.size(a) == 64) & (F.size(b) == 64), out).otherwise(fold)
+
+
+def _col_d2_static(a, b, n):
+    from pyspark.sql import functions as F
+
+    out = None
+    for i in range(1, n + 1):
+        d = F.element_at(a, F.lit(i)) - F.element_at(b, F.lit(i))
+        out = d * d if out is None else out + d * d
+    return out
+
+
 def test_vec_chain_sql_form_canonically_equals_column_form(spark):
-    # r12: dot/norm/fold_d2 accept column NAMES and build the guarded
-    # static chain as ONE cached F.expr parse (the Column-by-Column
-    # build cost ~380 ms of driver time per call site per execution —
-    # a 2-3x bench regression on every sub-second vector query). The
-    # name form must stay CANONICALLY EQUAL to the Column form after
-    # analysis: equal trees -> identical generated code -> bit-
-    # identical results. This is the equivalence proof for the r12
-    # one-parse rewrite; if either construction drifts, results could
-    # fork silently.
+    # r12: dot/norm/fold_d2/d2_static build the guarded static chain as
+    # ONE cached F.expr parse when every argument names a column (the
+    # Column-by-Column build cost ~380 ms of driver time per call site
+    # per execution — a 2-3x bench regression on every sub-second
+    # vector query). A bare F.col(name) counts as a name, so mixed
+    # calls parse once too; a composite or DataFrame-bound Column keeps
+    # the Column build. Every form must analyze to the Column-built
+    # reference above: equal trees -> identical generated code ->
+    # bit-identical results.
     from pyspark.sql import functions as F
 
     from kittispark.operators import similarity as sim
@@ -1226,22 +1274,40 @@ def test_vec_chain_sql_form_canonically_equals_column_form(spark):
         [(1, [float(i) for i in range(64)], [float(i) * 2 for i in range(64)])],
         "id long, qv array<double>, cv array<double>",
     )
-
-    pairs = [
-        (sim.dot("qv", "cv"), sim.dot(F.col("qv"), F.col("cv"))),
-        (sim.norm("qv"), sim.norm(F.col("qv"))),
-        (sim.fold_d2("qv", "cv"), sim.fold_d2(F.col("qv"), F.col("cv"))),
-        (
-            sim.d2_static("qv", "cv", 4),
-            sim.d2_static(F.col("qv"), F.col("cv"), 4),
-        ),
-        # non-standard width tier (the 16-dim truncation audit)
-        (sim.dot("qv", "cv", 16), sim.dot(F.col("qv"), F.col("cv"), 16)),
-        (sim.norm("qv", 16), sim.norm(F.col("qv"), 16)),
-    ]
+    q, c = F.col("qv"), F.col("cv")
+    qd = F.col("qv").cast("array<double>")  # an expression: Column build
+    argsets = [("qv", "cv"), (q, c), ("qv", c), (q, "cv"), (qd, "cv"), (df["qv"], df["cv"])]
+    pairs = []
+    for a, b in argsets:
+        ca = F.col(a) if isinstance(a, str) else a
+        cb = F.col(b) if isinstance(b, str) else b
+        pairs += [
+            (sim.dot(a, b), _col_dot(ca, cb)),
+            (sim.norm(a), _col_norm(ca)),
+            (sim.fold_d2(a, b), _col_fold_d2(ca, cb)),
+            (sim.d2_static(a, b, 4), _col_d2_static(ca, cb, 4)),
+            # non-standard width tier (the 16-dim truncation audit)
+            (sim.dot(a, b, 16), _col_dot(ca, cb, 16)),
+            (sim.norm(a, 16), _col_norm(ca, 16)),
+        ]
     for sql_col, col_col in pairs:
-        a = df.select(sql_col.alias("x"))._jdf.queryExecution().analyzed()
-        b = df.select(col_col.alias("x"))._jdf.queryExecution().analyzed()
-        assert (
-            a.canonicalized().toString() == b.canonicalized().toString()
-        ), "SQL-text and Column-built vector chains diverged"
+        assert_same_analyzed(df.select(sql_col.alias("x")), df.select(col_col.alias("x")))
+
+
+def test_vec_chain_caches_hold_sql_text(spark):
+    # a cached Column is a handle into one py4j gateway and goes stale
+    # when the gateway restarts; the caches hold the SQL text instead
+    from pyspark.sql import functions as F
+
+    from kittispark.operators import similarity as sim
+
+    sim.dot("qv", F.col("cv"))
+    sim.norm("qv")
+    sim.fold_d2("qv", "cv")
+    sim.d2_static("qv", "cv", 4)
+    for cached in (sim._vec_chain_sql, sim._d2_static_sql):
+        assert cached.cache_info().currsize > 0
+    assert isinstance(sim._vec_chain_sql("dot", "`qv`", "cv", 64), str)
+    assert isinstance(sim._vec_chain_sql("norm", "`qv`", None, 64), str)
+    assert isinstance(sim._vec_chain_sql("d2", "`qv`", "`cv`"), str)
+    assert isinstance(sim._d2_static_sql("`qv`", "`cv`", 4), str)
