@@ -15,9 +15,10 @@ Scale design (the point of each choice):
 - SimHash: 64-bit sign-aggregated token hashes, entirely JVM-side
   (explode -> xxhash64 -> 64 bit-vote sums in one partial agg);
   banding on 16-bit chunks gives the candidate join.
-- n-gram Jaccard: exact verification join over distinct shingles —
-  inverted-index shape (explode -> self-equi-join on shingle), the
-  standard verify stage after LSH candidates.
+- n-gram Jaccard: one exact verify stage (shingle_overlap) over
+  distinct shingles — the inverted-index self-equi-join on shingle
+  for all pairs, or the candidate-bounded join for the pairs LSH
+  proposed.
 """
 
 from __future__ import annotations
@@ -38,7 +39,6 @@ MINHASH_P = 2_147_483_647
 MINHASH_PARAMS = [
     (1_103_515_245 + 12_345 * i, 1_013_904_223 + 789_221 * i) for i in range(16)
 ]
-_MINHASH_PARAMS = MINHASH_PARAMS  # back-compat alias
 
 
 def portable_hash64(col: str | Column) -> Column:
@@ -166,8 +166,8 @@ def minhash_signature(
     insensitive, so no distinct pass over shingles is needed for set
     semantics. Docs shorter than the shingle width yield no signature
     (they can't be near-dups by this measure)."""
-    if num_hashes > len(_MINHASH_PARAMS):
-        raise ValueError(f"num_hashes <= {len(_MINHASH_PARAMS)}")
+    if num_hashes > len(MINHASH_PARAMS):
+        raise ValueError(f"num_hashes <= {len(MINHASH_PARAMS)}")
     base = shingle_rows(df, text_col, id_col).select(
         "doc_id", F.pmod(portable_hash64("sh"), F.lit(MINHASH_P)).alias("h")
     )
@@ -176,7 +176,7 @@ def minhash_signature(
             F.min(F.pmod(F.lit(a) * F.col("h") + F.lit(b), F.lit(MINHASH_P))).alias(
                 f"_m{i}"
             )
-            for i, (a, b) in enumerate(_MINHASH_PARAMS[:num_hashes])
+            for i, (a, b) in enumerate(MINHASH_PARAMS[:num_hashes])
         ]
     )
     return sig.select(
@@ -315,39 +315,75 @@ def minhash_probe_index(
     )
 
 
+def shingle_overlap(
+    docs: DataFrame,
+    cands: DataFrame | None = None,
+    text_col: str = "text",
+    id_col: str = "doc_id",
+) -> DataFrame:
+    """(doc_a, doc_b, n_inter, n_union): the exact shingle-set overlap
+    of doc pairs, as bigints — the one verify stage every exact-Jaccard
+    consumer folds (jaccard = n_inter / n_union).
+
+    With ``cands`` None, every pair sharing at least one shingle, with
+    doc_a < doc_b (inverted-index self-join on the shingle). With a
+    (doc_a, doc_b) candidate DataFrame, only those pairs, candidate-
+    bounded: expand each candidate by doc_a's shingles, then equi-join
+    doc_b's shingle set on (doc_b, sh) — cost scales with |candidates|
+    x shingles/doc, never with the stop-shingle-quadratic inverted
+    index. Either way a pair sharing no shingle yields no row.
+
+    The per-doc size tables are one row per document, so they carry no
+    broadcast hint: forcing one would ship (and driver-collect) the
+    whole doc table at scale. AQE still broadcasts while it fits;
+    beyond that these are doc-keyed shuffle joins aligned with the
+    pair keys. The union is long arithmetic, exact before any cast."""
+    ds = shingle_rows(docs, text_col, id_col).distinct()
+    sizes = ds.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh"))
+    if cands is None:
+        a, b = ds.alias("a"), ds.alias("b")
+        pairs = a.join(
+            b, (F.col("a.sh") == F.col("b.sh")) & (F.col("a.doc_id") < F.col("b.doc_id"))
+        ).groupBy(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
+    else:
+        sh_a = ds.select(F.col("doc_id").alias("doc_a"), "sh")
+        sh_b = ds.select(F.col("doc_id").alias("doc_b"), "sh")
+        pairs = (
+            cands.join(sh_a, "doc_a")
+            .join(sh_b, ["doc_b", "sh"])
+            .groupBy("doc_a", "doc_b")
+        )
+    inter = pairs.agg(F.count(F.lit(1)).alias("n_inter"))
+    sa = sizes.select(F.col("doc_id").alias("doc_a"), F.col("n_sh").alias("n_a"))
+    sb = sizes.select(F.col("doc_id").alias("doc_b"), F.col("n_sh").alias("n_b"))
+    return (
+        inter.join(sa, "doc_a")
+        .join(sb, "doc_b")
+        .select(
+            "doc_a",
+            "doc_b",
+            "n_inter",
+            (F.col("n_a") + F.col("n_b") - F.col("n_inter")).alias("n_union"),
+        )
+    )
+
+
 def ngram_jaccard_pairs(
     df: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
-    n: int = 3,
     threshold: float = 0.5,
 ) -> DataFrame:
-    """Exact n-gram Jaccard similarity for every pair sharing at least
-    one shingle (inverted-index join; the verify stage after LSH)."""
-    ds = shingle_rows(df, text_col, id_col).distinct()
-    sizes = ds.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh"))
-    a, b = ds.alias("a"), ds.alias("b")
-    inter = (
-        a.join(b, (F.col("a.sh") == F.col("b.sh")) & (F.col("a.doc_id") < F.col("b.doc_id")))
-        .groupBy(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .agg(F.count(F.lit(1)).alias("n_inter"))
-    )
-    sa = sizes.select(F.col("doc_id").alias("doc_a"), F.col("n_sh").alias("n_a"))
-    sb = sizes.select(F.col("doc_id").alias("doc_b"), F.col("n_sh").alias("n_b"))
-    jac = F.col("n_inter").cast("double") / (
-        F.col("n_a") + F.col("n_b") - F.col("n_inter")
-    )
+    """Exact shingle (shingle_rows' 3-gram) Jaccard similarity for every pair sharing at least
+    one shingle (shingle_overlap's inverted-index join; the verify
+    stage after LSH)."""
+    jac = F.col("n_inter").cast("double") / F.col("n_union")
     # threshold on the RAW jaccard (the SQL oracles filter unrounded);
     # rounding is presentation only — filtering the rounded value
     # would admit pairs in [threshold - 5e-7, threshold) the oracle
     # excludes
-    # sizes is one row PER DOCUMENT — corpus-sized, so no broadcast
-    # hint: forcing it would ship (and driver-collect) the whole doc
-    # table at scale. AQE still broadcasts while it fits; beyond that
-    # these are doc-keyed shuffle joins aligned with inter's keys.
     return (
-        inter.join(sa, "doc_a")
-        .join(sb, "doc_b")
+        shingle_overlap(df, None, text_col, id_col)
         .select("doc_a", "doc_b", jac.alias("__jac"))
         .filter(F.col("__jac") >= threshold)
         .select("doc_a", "doc_b", F.round("__jac", 6).alias("jaccard"))

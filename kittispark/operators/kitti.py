@@ -121,8 +121,6 @@ def sorted_percentile(zs: str | Column, percentage: float) -> Column:
     if not 0.0 <= percentage <= 1.0:
         raise ValueError(f"percentage must be in [0, 1], got {percentage!r}")
     ref = column_ref_sql(zs)
-    if ref is None:
-        raise TypeError(f"sorted_percentile reads a column by name, got {zs!r}")
     pos = f"(CAST(size({ref}) - 1 AS DOUBLE) * {sql_number(percentage)})"
     lo, hi = f"floor({pos})", f"ceil({pos})"
     v_lo, v_hi = f"get({ref}, CAST({lo} AS INT))", f"get({ref}, CAST({hi} AS INT))"

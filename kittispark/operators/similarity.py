@@ -72,14 +72,6 @@ def _unit_rows(m: "np.ndarray") -> "np.ndarray":
 _STATIC_DIM = 64
 
 
-def _refs(*cols: str | Column) -> list[str] | None:
-    """SQL text for each argument when every one names a column (a
-    name or a bare F.col reference), else None: the caller then builds
-    its expression Column by Column."""
-    refs = [column_ref_sql(c) for c in cols]
-    return None if None in refs else refs
-
-
 @functools.lru_cache(maxsize=None)
 def _vec_chain_sql(
     kind: str, ra: str, rb: str | None = None, width: int = _STATIC_DIM
@@ -91,13 +83,13 @@ def _vec_chain_sql(
     vector query at sf0.1, where driver-side plan construction
     dominates the sub-second runtime; one parse is ~36 ms and the
     cache makes repeat column names free). The parsed tree is
-    CANONICALLY EQUAL to the Column-built form (unit-tested in
-    tests/test_plans.py), so results, plans and generated code are
-    bit-identical.
+    CANONICALLY EQUAL to the r11 Column-built form (whose reference
+    builders tests/test_plans.py keeps), so results, plans and
+    generated code are bit-identical.
 
-    Args are SQL column references (see _refs). The cache holds the
-    text, not a parsed Column: a Column is bound to one py4j gateway
-    and would go stale when the gateway restarts."""
+    Args are SQL column references (util.column_ref_sql). The cache
+    holds the text, not a parsed Column: a Column is bound to one py4j
+    gateway and would go stale when the gateway restarts."""
     d = width
     if kind == "dot":
         chain = " + ".join(
@@ -139,56 +131,19 @@ def _vec_chain_sql(
     raise ValueError(f"unknown chain kind: {kind}")
 
 
-def _dot_fold(a: Column, b: Column) -> Column:
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x
-    )
-
-
 def dot(a: str | Column, b: str | Column, width: int = _STATIC_DIM) -> Column:
     """Left-to-right folded dot product in double precision, with the
     guarded codegen fast path for `width` (default: the standard
     corpus width; callers operating on a known different width — the
     16-dim truncation audit — pass theirs so the chain, not the
-    interpreted fold, scores their rows). Pass column NAMES (strings)
-    on hot paths: the name form builds the chain in one cached parse;
-    the Column form pays the py4j round-trip build (kept for
-    composed/derived column expressions). A bare F.col(name) counts
-    as a name, so mixed calls like dot("qv", F.col("cv")) parse once
-    too."""
-    refs = _refs(a, b)
-    if refs is not None:
-        return F.expr(_vec_chain_sql("dot", *refs, width))
-    out = F.lit(0.0)
-    for i in range(1, width + 1):
-        out = out + F.element_at(a, F.lit(i)) * F.element_at(b, F.lit(i))
-    return F.when(
-        (F.size(a) == width) & (F.size(b) == width), out
-    ).otherwise(_dot_fold(a, b))
-
-
-def _norm_fold(a: Column) -> Column:
-    return F.sqrt(F.aggregate(a, F.lit(0.0), lambda acc, x: acc + x * x))
+    interpreted fold, scores their rows). The arguments name columns
+    (names or bare F.col references, mixed freely): the chain is one
+    cached parse (_vec_chain_sql)."""
+    return F.expr(_vec_chain_sql("dot", column_ref_sql(a), column_ref_sql(b), width))
 
 
 def norm(a: str | Column, width: int = _STATIC_DIM) -> Column:
-    refs = _refs(a)
-    if refs is not None:
-        return F.expr(_vec_chain_sql("norm", *refs, None, width))
-    out = F.lit(0.0)
-    for i in range(1, width + 1):
-        x = F.element_at(a, F.lit(i))
-        out = out + x * x
-    return F.when(F.size(a) == width, F.sqrt(out)).otherwise(
-        _norm_fold(a)
-    )
-
-
-def cosine(a: str | Column, b: str | Column) -> Column:
-    """Cosine similarity; NULL (not an ANSI DIVIDE_BY_ZERO crash)
-    when either side has zero norm — a zero vector has no direction,
-    so its similarity is undefined and every consumer excludes it."""
-    return dot(a, b) / F.nullif(norm(a) * norm(b), F.lit(0.0))
+    return F.expr(_vec_chain_sql("norm", column_ref_sql(a), None, width))
 
 
 def rank_topk(scored: DataFrame, k: int) -> DataFrame:
@@ -226,8 +181,8 @@ def cosine_topk(
     within each query with a deterministic tiebreak. The exhaustive
     baseline every ANN variant is measured against."""
     # Norms are precomputed per ROW before the pair join — bit-identical
-    # to cosine() per pair (same fold on the same data) but 1 array fold
-    # per pair instead of 3.
+    # to dot(a, b) / (norm(a) * norm(b)) per pair (same fold on the same
+    # data) but 1 array fold per pair instead of 3.
     q = queries.select(
         F.col(id_col).alias("query_id"), as_double(vec_col).alias("qv")
     ).withColumn("qn", norm("qv"))
@@ -888,17 +843,9 @@ def d2_static(a: str | Column, b: str | Column, n: int) -> Column:
     MILLIONS of tiny fixed-width folds (measured ~2.5x end-to-end on
     pq_rerank_topk at sf0.1). `n` must equal the actual slice width:
     a mismatch fails loudly (ANSI INVALID_ARRAY_INDEX), never
-    truncates. Pass column NAMES on hot paths (one cached parse,
-    see _vec_chain_sql)."""
-    refs = _refs(a, b)
-    if refs is not None:
-        return F.expr(_d2_static_sql(*refs, n))
-    out = None
-    for i in range(1, n + 1):
-        d = F.element_at(a, F.lit(i)) - F.element_at(b, F.lit(i))
-        term = d * d
-        out = term if out is None else out + term
-    return out
+    truncates. The arguments name columns (one cached parse, see
+    _vec_chain_sql)."""
+    return F.expr(_d2_static_sql(column_ref_sql(a), column_ref_sql(b), n))
 
 
 def fold_d2(a: str | Column, b: str | Column) -> Column:
@@ -907,26 +854,9 @@ def fold_d2(a: str | Column, b: str | Column) -> Column:
     list_sum(list_transform(...)) twin, where a hash-agg float sum
     would drift by summation order. Carries the guarded _STATIC_DIM
     codegen fast path (same association + 0.0 seed; squares are never
-    -0.0, but the seed keeps the forms textually aligned). Pass
-    column NAMES on hot paths (one cached parse, see _vec_chain_sql)."""
-    refs = _refs(a, b)
-    if refs is not None:
-        return F.expr(_vec_chain_sql("d2", *refs))
-    out = F.lit(0.0)
-    for i in range(1, _STATIC_DIM + 1):
-        d = F.element_at(a, F.lit(i)) - F.element_at(b, F.lit(i))
-        out = out + d * d
-    return F.when(
-        (F.size(a) == _STATIC_DIM) & (F.size(b) == _STATIC_DIM), out
-    ).otherwise(_fold_d2_hof(a, b))
-
-
-def _fold_d2_hof(a: Column, b: Column) -> Column:
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
+    -0.0, but the seed keeps the forms textually aligned). The
+    arguments name columns (one cached parse, see _vec_chain_sql)."""
+    return F.expr(_vec_chain_sql("d2", column_ref_sql(a), column_ref_sql(b)))
 
 
 def _sub_slices(

@@ -37,10 +37,6 @@ def tokens_col(text: str | Column = "text") -> Column:
     return F.split(text, " ")
 
 
-def with_tokens(df: DataFrame, text_col: str = "text", out: str = "tokens") -> DataFrame:
-    return df.withColumn(out, tokens_col(text_col))
-
-
 def quality_cols(text_col: str = "text") -> list[Column]:
     """Quality-scoring expressions: token counts, type/token ratio,
     average token length. Round-6 so oracle hashes are stable."""

@@ -21,16 +21,16 @@ def qident(name: str) -> str:
     return "`" + name.replace("`", "``") + "`"
 
 
-def column_ref_sql(c: str | Column) -> str | None:
+def column_ref_sql(c: str | Column) -> str:
     """SQL text for the column `c` names: a name is quoted whole; a
     Column that is a bare column reference (F.col(name)) gives its own
-    SQL text. None for any other Column: an expression, or a reference
-    bound to one DataFrame (df["x"]), which SQL text cannot express."""
+    SQL text. Any other Column, an expression or a reference bound to
+    one DataFrame (df["x"]), has no such text and raises TypeError."""
     if isinstance(c, str):
         return qident(c)
     node = c._jc.node()
     if node.getClass().getSimpleName() != "UnresolvedAttribute":
-        return None
+        raise TypeError(f"expected a column name or F.col(name), got {c!r}")
     return node.sql()
 
 
@@ -174,22 +174,3 @@ def release_pins() -> int:
         _PIN_TRACKER.pop().unpersist(blocking=False)
         n += 1
     return n
-
-
-def ensure_min_parallelism(df: DataFrame, min_partitions: int | None = None) -> DataFrame:
-    """Round-robin repartition iff the input has fewer partitions than
-    the session's parallelism.
-
-    Why: a small parquet file arrives as ONE partition, and any
-    operator that fans out work per row (shingle explode, per-row
-    GEMM scoring, signature hashing) then runs on one core no matter
-    how many the cluster has. The repartition shuffles only the small
-    *input* (cheap), unlocking full parallelism for the expensive
-    downstream. At 100 TB inputs already have >= cluster parallelism
-    partitions and this is a no-op — the guard exists precisely so the
-    operator behaves at BOTH ends of the scale."""
-    sc = df.sparkSession.sparkContext
-    target = min_partitions or sc.defaultParallelism
-    if df.rdd.getNumPartitions() >= target:
-        return df
-    return df.repartition(target)

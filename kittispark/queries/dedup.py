@@ -23,6 +23,7 @@ from kittispark.operators.dedup import (
     minhash_lsh_candidates,
     minhash_signature,
     ngram_jaccard_pairs,
+    shingle_overlap,
     simhash_near_dup_candidates,
 )
 
@@ -264,36 +265,10 @@ def _near_dup_pipeline_oracle() -> str:
     tags=("dedup", "llm-pipeline", "iterative"),
 )
 def near_dup_pipeline_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from kittispark.operators.dedup import shingle_rows
-
     docs = t(spark, sf_dir, "documents")
-    cands = minhash_lsh_candidates(docs)
-    ds = shingle_rows(docs).distinct()
-    sizes = ds.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh"))
-    # candidate-bounded verify: expand candidates by doc_a's shingles,
-    # then equi-join doc_b's shingle set on (doc_b, sh) — cost scales
-    # with |candidates| x shingles/doc, not with the inverted index
-    sh_a = ds.select(F.col("doc_id").alias("doc_a"), "sh")
-    sh_b = ds.select(F.col("doc_id").alias("doc_b"), "sh")
-    inter = (
-        cands.join(sh_a, "doc_a")
-        .join(sh_b, ["doc_b", "sh"])
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count(F.lit(1)).alias("n_inter"))
-    )
-    sa = sizes.select(F.col("doc_id").alias("doc_a"), F.col("n_sh").alias("n_a"))
-    sb = sizes.select(F.col("doc_id").alias("doc_b"), F.col("n_sh").alias("n_b"))
-    jac = F.col("n_inter").cast("double") / (
-        F.col("n_a") + F.col("n_b") - F.col("n_inter")
-    )
     verified = (
-        # per-DOC size tables: planner's join choice, no forced
-        # broadcast (the grouped_rank/pagerank ADVICE class — at
-        # corpus scale these are one row per document; AQE still
-        # broadcasts them whenever they are actually small)
-        inter.join(sa, "doc_a")
-        .join(sb, "doc_b")
-        .filter(jac >= 0.5)
+        shingle_overlap(docs, minhash_lsh_candidates(docs))
+        .filter(F.col("n_inter").cast("double") / F.col("n_union") >= 0.5)
         .select("doc_a", "doc_b")
     )
     comps = connected_components(verified, src="doc_a", dst="doc_b")

@@ -12,10 +12,13 @@ pipeline's knobs before deployment.
 - ``dedup_threshold_curve`` — near-duplicate pair counts at Jaccard
   thresholds 0.3..0.9: the sensitivity curve that picks a dedup
   threshold (too low removes legitimate text, too high leaves
-  near-dups in). Pairs come from the exact inverted-index
-  self-join; per-threshold membership is decided by INTEGER
-  cross-multiplication (100*n_inter >= t_pct*union), so a pair
-  sitting exactly on a threshold can never fork between engines.
+  near-dups in). Pairs and their exact shingle overlaps come from
+  operators.dedup.shingle_overlap over all shingle-sharing pairs;
+  ``dedup_threshold_curve_lsh`` reads the same overlaps over the
+  MinHash-LSH candidates only. Both fold them with _threshold_curve:
+  per-threshold membership is decided by INTEGER cross-multiplication
+  (100*n_inter >= t_pct*n_union), so a pair sitting exactly on a
+  threshold can never fork between engines.
 
 Reference parity: none — SURVEY.md §6 LLM-pipeline breadth.
 """
@@ -26,6 +29,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from kittispark.operators.dedup import minhash_lsh_candidates, shingle_overlap
 from kittispark.queries._util import t
 from kittispark.registry import register
 
@@ -145,6 +149,55 @@ def watermark_lateness_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# The oracle twin of _threshold_curve, over a `pairs` CTE of
+# (doc_a, doc_b, n_inter, un): shared by both curve oracles.
+_CURVE_SQL = f"""curve AS (
+        SELECT t, doc_a, doc_b, 100 * n_inter >= t * un AS ok
+        FROM pairs,
+             LATERAL (SELECT unnest([{", ".join(str(x) for x in _THRESHOLDS)}])
+                      AS t) g
+    )
+    SELECT CAST(t AS INT) AS threshold_pct,
+           CAST(count(*) FILTER (ok) AS BIGINT) AS n_pairs,
+           CAST(count(DISTINCT CASE WHEN ok THEN doc_a END)
+                + count(DISTINCT CASE WHEN ok THEN doc_b END) AS BIGINT)
+               AS n_doc_slots
+    FROM curve
+    GROUP BY t
+    ORDER BY threshold_pct
+    """
+
+
+def _threshold_curve(pairs: DataFrame) -> DataFrame:
+    """The threshold curve over shingle_overlap's (doc_a, doc_b,
+    n_inter, n_union) pairs, all seven thresholds in ONE pass (explode
+    + conditional aggregation). Membership is the integer test
+    100*n_inter >= t*n_union, so a pair exactly ON a threshold is
+    decided identically by both engines."""
+    curve = pairs.select(
+        "doc_a",
+        "doc_b",
+        "n_inter",
+        "n_union",
+        F.explode(F.array(*[F.lit(x) for x in _THRESHOLDS])).alias("t"),
+    ).withColumn("ok", 100 * F.col("n_inter") >= F.col("t") * F.col("n_union"))
+    return (
+        curve.groupBy(F.col("t").cast("int").alias("threshold_pct"))
+        .agg(
+            F.sum(F.when(F.col("ok"), 1).otherwise(0))
+            .cast("bigint")
+            .alias("n_pairs"),
+            (
+                F.countDistinct(F.when(F.col("ok"), F.col("doc_a")))
+                + F.countDistinct(F.when(F.col("ok"), F.col("doc_b")))
+            )
+            .cast("bigint")
+            .alias("n_doc_slots"),
+        )
+        .orderBy("threshold_pct")
+    )
+
+
 @register(
     "dedup_threshold_curve",
     oracle=f"""
@@ -172,25 +225,11 @@ def watermark_lateness_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
         JOIN sizes sa ON sa.doc_id = doc_a
         JOIN sizes sb ON sb.doc_id = doc_b
     ),
-    curve AS (
-        SELECT t, doc_a, doc_b,
-               100 * n_inter >= t * un AS ok
-        FROM pairs,
-             LATERAL (SELECT unnest([{", ".join(str(x) for x in _THRESHOLDS)}])
-                      AS t) g
-    )
-    SELECT CAST(t AS INT) AS threshold_pct,
-           CAST(count(*) FILTER (ok) AS BIGINT) AS n_pairs,
-           CAST(count(DISTINCT CASE WHEN ok THEN doc_a END)
-                + count(DISTINCT CASE WHEN ok THEN doc_b END) AS BIGINT)
-               AS n_doc_slots
-    FROM curve
-    GROUP BY t
-    ORDER BY threshold_pct
-    """,
+    {_CURVE_SQL}""",
     doc="Dedup threshold-sensitivity curve: exact 3-gram Jaccard "
-    "pairs (the inverted-index self-join — only shingle-sharing "
-    "pairs ever meet) counted at thresholds 30%..90% in ONE pass — "
+    "pairs (operators.dedup.shingle_overlap's inverted-index join — "
+    "only shingle-sharing pairs ever meet) counted at thresholds "
+    "30%..90% in ONE pass — "
     "the curve that picks a production dedup threshold. Membership "
     "at each threshold is integer cross-multiplication "
     "(100*|inter| >= t*|union|), so a pair exactly ON a threshold "
@@ -207,57 +246,7 @@ def watermark_lateness_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("dedup", "aggregate"),
 )
 def dedup_threshold_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from kittispark.operators.dedup import shingles_col
-
-    docs = t(spark, sf_dir, "documents").filter(F.col("text").isNotNull())
-    sh = docs.select(
-        "doc_id", F.explode(shingles_col("text", 3)).alias("shingle")
-    ).distinct()
-    sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh"))
-    a = sh.select(F.col("doc_id").alias("doc_a"), "shingle")
-    b = sh.select(F.col("doc_id").alias("doc_b"), "shingle")
-    inter = (
-        a.join(b, "shingle")
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("n_inter"))
-    )
-    sa = sizes.select(F.col("doc_id").alias("doc_a"), F.col("n_sh").alias("na"))
-    sb = sizes.select(F.col("doc_id").alias("doc_b"), F.col("n_sh").alias("nb"))
-    pairs = (
-        inter.join(sa, "doc_a")
-        .join(sb, "doc_b")
-        .select(
-            "doc_a",
-            "doc_b",
-            "n_inter",
-            (F.col("na") + F.col("nb") - F.col("n_inter"))
-            .cast("bigint")
-            .alias("un"),
-        )
-    )
-    curve = pairs.select(
-        "doc_a",
-        "doc_b",
-        "n_inter",
-        "un",
-        F.explode(F.array(*[F.lit(x) for x in _THRESHOLDS])).alias("t"),
-    ).withColumn("ok", 100 * F.col("n_inter") >= F.col("t") * F.col("un"))
-    return (
-        curve.groupBy(F.col("t").cast("int").alias("threshold_pct"))
-        .agg(
-            F.sum(F.when(F.col("ok"), 1).otherwise(0))
-            .cast("bigint")
-            .alias("n_pairs"),
-            (
-                F.countDistinct(F.when(F.col("ok"), F.col("doc_a")))
-                + F.countDistinct(F.when(F.col("ok"), F.col("doc_b")))
-            )
-            .cast("bigint")
-            .alias("n_doc_slots"),
-        )
-        .orderBy("threshold_pct")
-    )
+    return _threshold_curve(shingle_overlap(t(spark, sf_dir, "documents")))
 
 
 def _lsh_curve_oracle() -> str:
@@ -286,21 +275,7 @@ def _lsh_curve_oracle() -> str:
         JOIN sizes sa ON sa.doc_id = i.doc_a
         JOIN sizes sb ON sb.doc_id = i.doc_b
     ),
-    curve AS (
-        SELECT t, doc_a, doc_b, 100 * n_inter >= t * un AS ok
-        FROM pairs,
-             LATERAL (SELECT unnest([{", ".join(str(x) for x in _THRESHOLDS)}])
-                      AS t) g
-    )
-    SELECT CAST(t AS INT) AS threshold_pct,
-           CAST(count(*) FILTER (ok) AS BIGINT) AS n_pairs,
-           CAST(count(DISTINCT CASE WHEN ok THEN doc_a END)
-                + count(DISTINCT CASE WHEN ok THEN doc_b END) AS BIGINT)
-               AS n_doc_slots
-    FROM curve
-    GROUP BY t
-    ORDER BY threshold_pct
-    """
+    {_CURVE_SQL}"""
 
 
 @register(
@@ -310,7 +285,8 @@ def _lsh_curve_oracle() -> str:
     "identical curve semantics to dedup_threshold_curve, but the "
     "pair set feeds from the MinHash-LSH banded candidates "
     "(minhash_lsh_candidates) with exact Jaccard computed "
-    "candidate-bounded — cost scales with |candidates| x "
+    "candidate-bounded by the same operators.dedup.shingle_overlap "
+    "— cost scales with |candidates| x "
     "shingles/doc, never with the stop-shingle-quadratic inverted "
     "index, so THIS form (unlike the quadratic twin, which stays "
     "gate-only as the adjudication oracle) joins the 50x sweep and "
@@ -325,56 +301,5 @@ def _lsh_curve_oracle() -> str:
     tags=("dedup", "aggregate", "llm-pipeline"),
 )
 def dedup_threshold_curve_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from kittispark.operators.dedup import minhash_lsh_candidates, shingle_rows
-
     docs = t(spark, sf_dir, "documents")
-    cands = minhash_lsh_candidates(docs)
-    ds = shingle_rows(docs).distinct()
-    sizes = ds.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh"))
-    sh_a = ds.select(F.col("doc_id").alias("doc_a"), "sh")
-    sh_b = ds.select(F.col("doc_id").alias("doc_b"), "sh")
-    inter = (
-        cands.join(sh_a, "doc_a")
-        .join(sh_b, ["doc_b", "sh"])
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("n_inter"))
-    )
-    sa = sizes.select(F.col("doc_id").alias("doc_a"), F.col("n_sh").alias("na"))
-    sb = sizes.select(F.col("doc_id").alias("doc_b"), F.col("n_sh").alias("nb"))
-    pairs = (
-        # per-DOC size tables: planner's choice, no forced broadcast
-        # (one row per document at corpus scale — see
-        # near_dup_pipeline_survivors)
-        inter.join(sa, "doc_a")
-        .join(sb, "doc_b")
-        .select(
-            "doc_a",
-            "doc_b",
-            "n_inter",
-            (F.col("na") + F.col("nb") - F.col("n_inter"))
-            .cast("bigint")
-            .alias("un"),
-        )
-    )
-    curve = pairs.select(
-        "doc_a",
-        "doc_b",
-        "n_inter",
-        "un",
-        F.explode(F.array(*[F.lit(x) for x in _THRESHOLDS])).alias("t"),
-    ).withColumn("ok", 100 * F.col("n_inter") >= F.col("t") * F.col("un"))
-    return (
-        curve.groupBy(F.col("t").cast("int").alias("threshold_pct"))
-        .agg(
-            F.sum(F.when(F.col("ok"), 1).otherwise(0))
-            .cast("bigint")
-            .alias("n_pairs"),
-            (
-                F.countDistinct(F.when(F.col("ok"), F.col("doc_a")))
-                + F.countDistinct(F.when(F.col("ok"), F.col("doc_b")))
-            )
-            .cast("bigint")
-            .alias("n_doc_slots"),
-        )
-        .orderBy("threshold_pct")
-    )
+    return _threshold_curve(shingle_overlap(docs, minhash_lsh_candidates(docs)))

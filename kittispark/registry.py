@@ -110,13 +110,30 @@ def _load_all() -> None:
 # new form, the truly-fresh ones have no driver signal at all.
 _REVERIFY: frozenset[str] = frozenset(
     {
+        "dedup_cluster_assign",
+        "dedup_threshold_curve",
+        "dedup_threshold_curve_lsh",
         "kitti_analysis_envelope",
         "kitti_calib_chain",
         "kitti_cutout_roundtrip",
         "kitti_label_file_scan",
+        "minhash_lsh_recall",
+        "near_dup_pipeline_survivors",
+        "ngram_jaccard_pairs",
         "wireframe_edge_segments",
     }
 )
+# r13: the six exact-Jaccard verify consumers queued —
+# near_dup_pipeline_survivors, dedup_threshold_curve and
+# dedup_threshold_curve_lsh now read operators.dedup.shingle_overlap
+# (the one shingle intersect/union stage) instead of their own copies,
+# and both curves fold it with one shared _threshold_curve (their
+# oracles share its SQL twin). ngram_jaccard_pairs is rebuilt on the
+# same operator; dedup_cluster_assign and minhash_lsh_recall read it.
+# dedup_threshold_curve shingles with shingle_rows instead of
+# explode(shingles_col) — the same shingle set, tokenized once per doc.
+# Values are bit-identical and local oracle parity holds at sf0.001
+# and sf0.01, but the banked greens predate the rewrite.
 # r13: kitti_calib_chain, kitti_cutout_roundtrip, kitti_label_file_scan
 # and wireframe_edge_segments queued — the KITTI and viewer expressions
 # they run (calib_matrices, apply_calibration, axis_align,

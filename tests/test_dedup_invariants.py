@@ -12,6 +12,7 @@ from kittispark.operators.dedup import (
     minhash_lsh_candidates,
     minhash_signature,
     ngram_jaccard_pairs,
+    shingle_overlap,
     simhash_near_dup_candidates,
 )
 from kittispark.sources.tables import load_table
@@ -54,6 +55,45 @@ def test_identical_docs_jaccard_is_one(spark, with_clone):
         for r in ngram_jaccard_pairs(with_clone).collect()
     }
     assert rows[(0, 1_000_000)] == 1.0
+
+
+def test_candidate_bounded_overlap_equals_all_pairs_restriction(spark):
+    """shingle_overlap over a candidate set must give, row for row, the
+    all-pairs overlaps restricted to those candidates — exact n_inter
+    and n_union — and a candidate pair sharing no shingle gives no row
+    (the inner-join contract both verify forms keep)."""
+    base = load_table(spark, SF, "documents").select("doc_id", "text").limit(40)
+    # planted near-copies: the first 10 docs with one token appended
+    near = base.filter(F.col("doc_id") < 10).select(
+        (F.col("doc_id") + 1_000_000).alias("doc_id"),
+        F.concat_ws(" ", "text", F.lit("appended")).alias("text"),
+    )
+    disjoint = spark.createDataFrame(
+        [(2_000_000, "alpha beta gamma delta"), (2_000_001, "one two three four")],
+        "doc_id long, text string",
+    )
+    docs = base.unionByName(near).unionByName(disjoint).cache()
+    planted = [(d, d + 1_000_000) for d in range(10)]
+    no_overlap = (2_000_000, 2_000_001)
+    cands = minhash_lsh_candidates(docs).unionByName(
+        spark.createDataFrame(planted + [no_overlap], "doc_a long, doc_b long")
+    ).distinct()
+    cand_set = {(r["doc_a"], r["doc_b"]) for r in cands.collect()}
+
+    def overlaps(df):
+        assert [t for _, t in df.dtypes] == ["bigint"] * 4
+        return {
+            (r["doc_a"], r["doc_b"]): (r["n_inter"], r["n_union"])
+            for r in df.collect()
+        }
+
+    bounded = overlaps(shingle_overlap(docs, cands))
+    all_pairs = overlaps(shingle_overlap(docs))
+    assert bounded == {k: v for k, v in all_pairs.items() if k in cand_set}
+    assert no_overlap in cand_set and no_overlap not in bounded
+    # not vacuous: the planted near-copies of shingled docs all verify
+    assert sum(p in bounded for p in planted) >= 5
+    docs.unpersist()
 
 
 def test_identical_docs_are_simhash_candidates(spark, with_clone):

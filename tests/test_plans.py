@@ -1258,14 +1258,12 @@ def _col_d2_static(a, b, n):
 
 def test_vec_chain_sql_form_canonically_equals_column_form(spark):
     # r12: dot/norm/fold_d2/d2_static build the guarded static chain as
-    # ONE cached F.expr parse when every argument names a column (the
-    # Column-by-Column build cost ~380 ms of driver time per call site
-    # per execution — a 2-3x bench regression on every sub-second
-    # vector query). A bare F.col(name) counts as a name, so mixed
-    # calls parse once too; a composite or DataFrame-bound Column keeps
-    # the Column build. Every form must analyze to the Column-built
-    # reference above: equal trees -> identical generated code ->
-    # bit-identical results.
+    # ONE cached F.expr parse (the Column-by-Column build cost ~380 ms
+    # of driver time per call site per execution — a 2-3x bench
+    # regression on every sub-second vector query). A bare F.col(name)
+    # counts as a name, so mixed calls parse once too. Every form must
+    # analyze to the Column-built reference above: equal trees ->
+    # identical generated code -> bit-identical results.
     from pyspark.sql import functions as F
 
     from kittispark.operators import similarity as sim
@@ -1275,8 +1273,7 @@ def test_vec_chain_sql_form_canonically_equals_column_form(spark):
         "id long, qv array<double>, cv array<double>",
     )
     q, c = F.col("qv"), F.col("cv")
-    qd = F.col("qv").cast("array<double>")  # an expression: Column build
-    argsets = [("qv", "cv"), (q, c), ("qv", c), (q, "cv"), (qd, "cv"), (df["qv"], df["cv"])]
+    argsets = [("qv", "cv"), (q, c), ("qv", c), (q, "cv")]
     pairs = []
     for a, b in argsets:
         ca = F.col(a) if isinstance(a, str) else a
@@ -1292,6 +1289,18 @@ def test_vec_chain_sql_form_canonically_equals_column_form(spark):
         ]
     for sql_col, col_col in pairs:
         assert_same_analyzed(df.select(sql_col.alias("x")), df.select(col_col.alias("x")))
+    # a composite or DataFrame-bound Column has no SQL text: the chains
+    # read columns by name only, so it raises (as sorted_percentile does)
+    qd = F.col("qv").cast("array<double>")
+    for a, b in [(qd, "cv"), (df["qv"], df["cv"])]:
+        for build in (
+            lambda: sim.dot(a, b),
+            lambda: sim.norm(a),
+            lambda: sim.fold_d2(a, b),
+            lambda: sim.d2_static(a, b, 4),
+        ):
+            with pytest.raises(TypeError):
+                build()
 
 
 def test_vec_chain_caches_hold_sql_text(spark):
